@@ -126,24 +126,16 @@ object Recall {
     *     re-train remedy's payoff; the gap between the two is the price
     *     of NOT re-training at this drift)
     *
-    * DevStressR12 sweeps the delta; COVERAGE records where the re-train
-    * threshold sits. */
-  private[graft] val DriftDelta = 0.6
-  private[graft] def appendDriftMetrics(s: SparkSession): Seq[Metric] =
-    try appendDriftMetricsAt(s, DriftDelta) match {
-      case (a, r, rt) => Seq(a, r, rt)
-    } finally ops.CacheScope.releaseAll(s)
-
-  /** (appended-index recall, rebuilt-index recall, RETRAINED-index recall)
-    * on drifted-region queries at drift `delta` — shared by the
-    * recall.json metrics and the DevStress sweeps. The third number is the
-    * drift REMEDY measured: [[graft.ops.Similarity.retrainAnnIndex]] runs
-    * over the appended index (no corpus pass — quantizers re-derive from
-    * the index's own stored vectors) and must recover the rebuild's
-    * recall, closing the signal→remedy loop the quantization check
-    * opened. */
-  private[graft] def appendDriftMetricsAt(s: SparkSession,
-      delta: Double): (Metric, Metric, Metric) = {
+    *   - `fixture_ann_append_drift_retrain` — the drift REMEDY measured:
+    *     [[graft.ops.Similarity.retrainAnnIndex]] runs over the appended
+    *     index (no corpus pass — quantizers re-derive from the index's own
+    *     stored vectors) and must recover the rebuild's recall, closing
+    *     the signal→remedy loop the quantization check opened
+    *
+    * COVERAGE records where the re-train threshold sits, from a sweep of
+    * the delta. */
+  private val DriftDelta = 0.6
+  private[graft] def appendDriftMetrics(s: SparkSession): Seq[Metric] = try {
     import s.implicits._
     val k = FixtureK; val perCluster = 25; val dim = FixtureDim
     val base = ops.CacheScope.track(clusteredFixture(s))
@@ -154,7 +146,7 @@ object Recall {
     val baseCenters = fixtureCenters(new scala.util.Random(FixtureSeed))
     val drifted = baseCenters.map { c =>
       val g = Array.fill(dim)(rnd.nextGaussian())
-      val v = c.indices.map(d => c(d) + (delta * g(d)).toFloat)
+      val v = c.indices.map(d => c(d) + (DriftDelta * g(d)).toFloat)
       val n = math.sqrt(v.map(x => x.toDouble * x).sum)
       v.map(x => (x / n).toFloat).toArray
     }
@@ -179,7 +171,7 @@ object Recall {
       ops.Similarity.bruteForceTopK(combined, queryPred, k = 3))
     // TempDirs.scratch, not a bare createTempDirectory: the dir registers
     // with the JVM-exit cleanup list instead of leaking one written index
-    // per Verify run / sweep step
+    // per Verify run
     val dir = ops.TempDirs.scratch("graft-ann-drift")
     ops.Similarity.writeAnnIndex(ops.Similarity.buildAnnIndex(base), dir)
     ops.Similarity.appendAnnIndex(dir, batch)
@@ -196,9 +188,9 @@ object Recall {
     val rt = topkRecall("fixture_ann_append_drift_retrain",
       ops.Similarity.probeAnnIndex(ops.Similarity.readAnnIndex(s, dir),
         queries, k = 3), bf)
-    (a.copy(extra = Seq("center_cos_x1000" -> (centerCos * 1000).round)),
+    Seq(a.copy(extra = Seq("center_cos_x1000" -> (centerCos * 1000).round)),
       rb, rt)
-  }
+  } finally ops.CacheScope.releaseAll(s)
 
   /** Metrics on a CLUSTERED embedding fixture — the regime the ANN tiers and
     * the semantic quantizer are designed for. The sf embeddings table is
@@ -287,7 +279,7 @@ object Recall {
 
   /** The fixture's unit-norm cluster centers, drawn from `rnd` — ONE
     * derivation shared by [[clusteredFixture]] (which keeps consuming the
-    * same stream for member noise) and [[appendDriftMetricsAt]] (which
+    * same stream for member noise) and [[appendDriftMetrics]] (which
     * perturbs these exact centers; a drifted copy of re-derived-elsewhere
     * centers would silently measure drift against the wrong geometry). */
   private def fixtureCenters(rnd: scala.util.Random): Array[Array[Float]] =
@@ -373,8 +365,8 @@ object Recall {
       "appending instead of re-training at that drift — and the _retrain " +
       "number is retrainAnnIndex applied to the appended index (quantizers " +
       "re-derived from the index's own stored vectors, no corpus pass), " +
-      "which must recover the rebuild's recall (DevStressR12/R13 sweep " +
-      "the delta; COVERAGE.md records the re-train threshold)")
+      "which must recover the rebuild's recall (COVERAGE.md records the " +
+      "re-train threshold, from a sweep of the delta)")
     entries.mkString("{", ",", s""","notes":$notes}""")
   }
 }

@@ -36,47 +36,6 @@ object SparkEntry {
   private def analyzed(s: SparkSession, dir: String): Analyzer.Outputs =
     Analyzer.analyzeParsed(parsedCached(s, dir))
 
-  /** Bench hygiene: materialize the one-time shared artifacts for
-    * (s, dir) up front — the dl_* envelope+parse caches and the durable
-    * ANN index build+write — so per-query timings measure each query's
-    * steady state (the production job parses once and fans out; an ANN
-    * deployment builds its index once offline and probes it forever). */
-  def prewarm(s: SparkSession, dir: String): Unit = {
-    parsedCached(s, dir)
-    ops.Similarity.annIndexDir(emb(s, dir))
-    // the append-path index builds once too (a deployment appends offline;
-    // the probe query times the steady state) — dir construction inside
-    // annIndexAppendProbe is the eager side effect
-    ops.Similarity.annIndexAppendProbe(emb(s, dir))
-    // the takedown-path index likewise: build + tombstone + compaction are
-    // offline maintenance; ann_index_delete times the post-compaction probe
-    ops.Similarity.annIndexDeleteProbe(emb(s, dir))
-    // the retrain-path index too: build + append + retrain are the
-    // offline drift remedy; ann_index_retrain times the post-retrain
-    // probe (its siblings' convention — the r13 first bench capture paid
-    // the one-time 10.7 s composition inside the timed loop)
-    ops.Similarity.annIndexRetrainProbe(emb(s, dir))
-    // and the durable dedup index (dedup_index_probe's artifact)
-    val d = docs(s, dir)
-    val e = emb(s, dir).select(col("vec_id").as("doc_id"), col("embedding"))
-    ops.Dedup.indexDir(d.filter(col("doc_id") % 5 =!= 0),
-      Some(e.filter(col("doc_id") % 5 =!= 0)), 0.45)
-    // the appended-index fixture builds once too (build + append are the
-    // offline daily jobs; dedup_index_append times the steady-state probe —
-    // the dir-only entry point avoids discarded probe jobs at prewarm)
-    ops.Dedup.indexAppendDir(d, e)
-    // and the on-disk WARC fixture (prep_warc_files / web_warc_files):
-    // the write is fixture-RENDER scaffolding, not the operator — a real
-    // deployment reads crawl files it never wrote, so the timed queries
-    // should measure the read+parse+chain path
-    ops.Warc.fixtureFilesDir(d)
-    // the durable streaming-discovery table (web_frontier_unified): the
-    // continuous run a deployment operates offline — the timed query
-    // should measure the four-source batch collapse over its table
-    graft.streaming.StreamingCrawl.discoveredFrontierFixtureDir(d)
-    ()
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // T12: stack-trace classification over the synthesized scenario traces.
     "dl_classify" -> ((s, dir) =>
@@ -636,7 +595,7 @@ object SparkEntry {
         embThreshold = 0.45)
     }),
     // the steady-state daily-ingest probe: the 3-tier index is durable
-    // (built + written once per session via prewarm, as a deployment
+    // (built + written once per session on first use, as a deployment
     // builds once per day) and the query reads + probes — same rows as
     // dedup_incremental_emb (lossless parquet round trip), same oracle;
     // what changes is what is TIMED (the per-increment cost alone)

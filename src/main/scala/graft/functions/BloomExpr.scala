@@ -18,7 +18,7 @@ import org.apache.spark.util.sketch.BloomFilter
  * expression tree dozens of times per plan — with a megabyte blob in a
  * `Literal`, DRIVER-side plan processing dominates the whole job (measured:
  * the 1 MB literal made the 100×-corpus decontamination 20× slower than the
- * exact pass it was supposed to beat; see `DevStressR7 bloomab`). Spark
+ * exact pass it was supposed to beat, in a bloom-vs-exact A/B). Spark
  * itself avoids this by injecting the blob through a `ScalarSubquery`. Here
  * the blob is a plain constructor field instead: `Array[Byte]` hashes by
  * identity in a case class, so optimizer passes stay O(1) on it, and the

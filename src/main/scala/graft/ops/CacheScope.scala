@@ -92,17 +92,7 @@ object CacheScope {
     * to durable storage or write the stage as a table (same plan shape);
     * block footprint equals the persist the barrier replaces. Blocks are
     * released by [[releaseAll]] like every tracked persist. */
-  def barrier(df: DataFrame): DataFrame = {
-    evictStopped()
-    val cp = checkpointed(df, eager = true)
-    org.apache.spark.sql.graftbridge.checkpointRdd(cp).foreach { r =>
-      trackedRdds
-        .computeIfAbsent(cp.sparkSession,
-          _ => new ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
-        .add(r)
-    }
-    cp
-  }
+  def barrier(df: DataFrame): DataFrame = checkpointed(df, eager = true)
 
   /** Conf key selecting the DURABLE barrier flavor: when `true` AND the
     * SparkContext has a checkpoint directory set, [[barrier]]/[[barrierLazy]]
@@ -113,14 +103,26 @@ object CacheScope {
     * two are equivalent in durability and the local flavor skips the file
     * write; a cluster deployment sets this plus `sc.setCheckpointDir` and
     * every operator barrier in the repo becomes executor-loss-safe with no
-    * code change. */
+    * code change. [[releaseAll]] deletes the checkpoint files. */
   val ReliableBarrierConf = "spark.graft.barrier.reliable"
 
+  /** Cut `df`'s lineage and register the checkpoint RDD for [[releaseAll]].
+    * The reliable flavor is always eager: a lazy reliable checkpoint runs a
+    * second job after the caller's first action that recomputes the whole
+    * lineage to write the files, while the eager write is one job with one
+    * compute, and later reads come from the files. */
   private def checkpointed(df: DataFrame, eager: Boolean): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val reliable = df.sparkSession.conf
-      .get(ReliableBarrierConf, "false").toBoolean && sc.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+    evictStopped()
+    val s = df.sparkSession
+    val reliable = s.conf.get(ReliableBarrierConf, "false").toBoolean &&
+      s.sparkContext.getCheckpointDir.isDefined
+    val cp = if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager)
+    org.apache.spark.sql.graftbridge.checkpointRdd(cp).foreach { r =>
+      trackedRdds
+        .computeIfAbsent(s, _ => new ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
+        .add(r)
+    }
+    cp
   }
 
   /** [[barrier]] with the materialization DEFERRED to the caller's next
@@ -136,20 +138,12 @@ object CacheScope {
     * train whose scheduling cost grows with core count (r16 judge item 1:
     * 32-core bench SLOWER than 8-core on the hop queries). Caller
     * contract: run a full-coverage action before deriving anything else,
-    * or the first derived action pays the materialization instead. */
-  def barrierLazy(df: DataFrame): DataFrame = {
-    evictStopped()
-    val cp = checkpointed(df, eager = false)
-    org.apache.spark.sql.graftbridge.checkpointRdd(cp).foreach { r =>
-      trackedRdds
-        .computeIfAbsent(cp.sparkSession,
-          _ => new ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
-        .add(r)
-    }
-    cp
-  }
+    * or the first derived action pays the materialization instead. The
+    * reliable flavor ([[ReliableBarrierConf]]) materializes here, eagerly. */
+  def barrierLazy(df: DataFrame): DataFrame = checkpointed(df, eager = false)
 
-  /** Unpersist every tracked intermediate of `spark` (non-blocking). The
+  /** Unpersist every tracked intermediate of `spark` (non-blocking) and
+    * delete the files of its reliable barrier checkpoints. The
     * queue is drained in place rather than removed from the registry, so a
     * concurrent [[track]] can never register into an orphaned queue (it
     * lands in the live one and is released by this or the next drain).
@@ -172,6 +166,10 @@ object CacheScope {
       var r = rq.poll()
       while (r != null) {
         r.unpersist(blocking = false)
+        r.getCheckpointFile.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        }
         r = rq.poll()
       }
     }

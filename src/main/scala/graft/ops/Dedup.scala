@@ -1361,7 +1361,7 @@ object Dedup {
 
   /** The session's durable-index directory for a (history, embeddings)
     * pair — built + written on first use via [[buildIndex]]/[[writeIndex]],
-    * reused after (bench prewarm calls this). */
+    * reused after. */
   private[graft] def indexDir(history: DataFrame,
       embeddings: Option[DataFrame], embThreshold: Double): String = {
     val key = TempDirs.planDigest(
@@ -1483,7 +1483,7 @@ object Dedup {
     // factor, not quadratic (the straggler regime needs both sides
     // multiplied), while a diverse batch pays ZERO collapse machinery:
     // this probe is byte-for-byte the pre-r8 shape, measured at ~5 s vs
-    // the two-sided collapse's ~8 s at sf0.1 (DevIncAB, interleaved A/B).
+    // the two-sided collapse's ~8 s at sf0.1 (interleaved A/B).
     // Output is unchanged either way: every tier ends in min(hid) per
     // batch doc.
     val bandedH = index.banded

@@ -1072,7 +1072,7 @@ object Similarity {
     * fresh build over the same vectors (spec-witnessed) — drifted appends
     * whose residual error the frozen quantizers inflated re-encode under
     * quantizers trained on the full stored population, recovering the
-    * rebuild's recall (DevStress witness at the drift delta where the
+    * rebuild's recall (measured at the drift delta where the
     * frozen-quantizer append reads 0.64–0.72 and the rebuild 1.0).
     * Refuses an empty index (a full-takedown leftover is "delete the
     * directory", the [[compactAnnIndex]] contract). Single-writer per
@@ -1260,9 +1260,8 @@ object Similarity {
     * correctness gate (the [[Warc.webWarcFiles]] pattern). */
   /** The session's durable-index directory for an embeddings plan —
     * built + written on first use, reused after (a deployment builds the
-    * index ONCE offline; the bench prewarm calls this so the per-query
-    * timing measures the steady state, read+probe, the same rationale as
-    * the shared dl_* parse cache). */
+    * index ONCE offline, so repeated invocations time the steady state,
+    * read+probe, the same rationale as the shared dl_* parse cache). */
   private[graft] def annIndexDir(embeddings: DataFrame): String =
     TempDirs.cachedScratchDir(annIndexDirCache, embeddings.sparkSession,
       TempDirs.planDigest(embeddings.queryExecution.analyzed.canonicalized),

@@ -376,7 +376,7 @@ object TextAnalysis {
     * verified away by that exact join, so the output is bit-identical to
     * [[decontaminate]] — same oracle, deterministically.
     *
-    * Measured (DevStressR7 `bloomab`, 500k-doc corpus, full-result timing):
+    * Measured (bloom-vs-exact A/B, 500k-doc corpus, full-result timing):
     * exact 31.6 s vs bloom 20.2 s at the 2^23-bit default — the prefilter
     * wins once the train-side gram shuffle dominates; at toy scale the
     * extra blob-building pass costs more than it saves. Sizing: ~10 bits
@@ -1387,9 +1387,9 @@ object TextAnalysis {
     * pair to the word ids containing it, and a LAZY-DELETION MAX-HEAP holds
     * (count, pair) candidates so the per-round argmax is O(log |pairs|)
     * amortized, not a full map scan (an O(|pairs|)-per-round scan grew
-    * per-merge cost 2.5× between 1k and 8k rounds on a 50k-word vocab —
-    * measured in DevStressR7 — which re-caps the trainer at moderate vocab
-    * sizes). Every count update pushes a fresh heap entry; a popped entry is
+    * per-merge cost 2.5× between 1k and 8k rounds on a 50k-word vocab,
+    * which re-caps the trainer at moderate vocab sizes). Every count
+    * update pushes a fresh heap entry; a popped entry is
     * valid iff it still matches the pair's CURRENT count, else it is stale
     * and discarded (pairs whose count changed leave their old entries
     * behind). A merge round (a) pops to the first valid entry, (b) rewrites

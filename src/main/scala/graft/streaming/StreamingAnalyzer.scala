@@ -158,10 +158,8 @@ object StreamingAnalyzer {
   }
 
   /** The stateful stage: narrow projection → one `groupByKey` exchange →
-    * `flatMapGroupsWithState`. Shared by [[analyze]] and [[unified]]
-    * (`private[graft]` so the streaming bench can time this stage in
-    * isolation). */
-  private[graft] def statResults(good: DataFrame, onAggRecord: Enriched => Unit,
+    * `flatMapGroupsWithState`. Shared by [[analyze]] and [[unified]]. */
+  private def statResults(good: DataFrame, onAggRecord: Enriched => Unit,
       stateTtlMs: Option[Long]): DataFrame = {
     implicit val enc = Encoders.product[Enriched]
     val narrow: Dataset[Enriched] = good.select(

@@ -411,12 +411,13 @@ object StreamingCrawl {
     * a live deployment's continuous discovery leaves behind for the
     * daily batch plan ([[graft.ops.Robots.webFrontierUnified]] reads it
     * back). Built once per (session, corpus) — the offline build a
-    * deployment runs continuously, prewarmed like the ANN/dedup index
-    * fixtures so the gate and bench time the steady-state batch collapse,
-    * not fixture construction. The table's first-referrer choices can
-    * vary with file batching (first trigger wins), but its `url_norm`
-    * SET — the only thing the unified frontier consumes along with link
-    * spellings that batch linkPages re-supply — is deterministic. */
+    * deployment runs continuously, cached like the ANN/dedup index
+    * fixtures so repeated invocations time the steady-state batch
+    * collapse, not fixture construction. The table's first-referrer
+    * choices can vary with file batching (first trigger wins), but its
+    * `url_norm` SET — the only thing the unified frontier consumes along
+    * with link spellings that batch linkPages re-supply — is
+    * deterministic. */
   private[graft] def discoveredFrontierFixtureDir(docs: DataFrame): String = {
     val spark = docs.sparkSession
     graft.ops.TempDirs.cachedScratchDir(discFixtureCache, spark,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Round-15 optimization harness: plan capture + per-stage profiling for
-  * declared queries, mirroring the Bench session config.
+/** Plan capture + per-stage profiling for declared queries. Each query
+  * builds its own fixtures on first use.
   *
   * Usage (sbt Test/runMain):
   *   graft.DevPlanProf plans <outDir> <query> [query ...]   — write
@@ -38,7 +38,6 @@ object DevPlanProf {
       case "plans" =>
         val outDir = args(1)
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        try SparkEntry.prewarm(spark, sfDir) catch { case _: Throwable => () }
         args.drop(2).foreach { name =>
           val df = SparkEntry.queries(name)(spark, sfDir)
           val s = org.apache.spark.sql.graftbridge.formattedPlan(df)
@@ -50,7 +49,6 @@ object DevPlanProf {
         }
 
       case "prof" =>
-        try SparkEntry.prewarm(spark, sfDir) catch { case _: Throwable => () }
         // per-stage metrics listener: name -> (count, ms, shuffle bytes)
         val stages = new java.util.concurrent.ConcurrentLinkedQueue[
           (Int, String, Long, Long, Long, Int)]()
@@ -84,7 +82,7 @@ object DevPlanProf {
         })
         val reps = sys.env.getOrElse("GRAFT_PROF_REPS", "1").toInt
         args.drop(1).foreach { name =>
-          // warm-up (codegen compile etc.), mirroring the Bench loop
+          // untimed warm-up: fixture builds, codegen compile etc.
           try org.apache.spark.sql.graftbridge.forceCount(
             SparkEntry.queries(name)(spark, sfDir))
           catch { case e: Throwable => println(s"[prof] $name warmup FAILED: $e") }

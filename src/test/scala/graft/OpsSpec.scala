@@ -4298,27 +4298,40 @@ class OpsSpec extends SparkSpec {
     val spark2 = spark; import spark2.implicits._
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
       .filter(col("id") > 1)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-relbar").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-relbar")
     val expected = df.collect().toSet
+    def files(f: java.io.File): Seq[java.io.File] = {
+      val k = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
+      k.filter(_.isFile) ++ k.filter(_.isDirectory).flatMap(files)
+    }
     try {
-      spark.sparkContext.setCheckpointDir(ckDir)
+      spark.sparkContext.setCheckpointDir(ckDir.toString)
       spark.conf.set(CacheScope.ReliableBarrierConf, "true")
       val b = CacheScope.barrier(df)
       assert(b.collect().toSet == expected)
       // lineage is cut: the analyzed plan is a leaf over the checkpoint RDD
       assert(org.apache.spark.sql.graftbridge.checkpointRdd(b).isDefined)
       // durable: block files landed under the checkpoint dir
-      def files(f: java.io.File): Seq[java.io.File] = {
-        val k = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
-        k.filter(_.isFile) ++ k.filter(_.isDirectory).flatMap(files)
-      }
-      assert(files(new java.io.File(ckDir)).nonEmpty, "no checkpoint files written")
+      assert(files(ckDir.toFile).nonEmpty, "no checkpoint files written")
       // the lazy flavor materializes on the caller's first full action
       val bl = CacheScope.barrierLazy(df)
       assert(bl.count() == 2 && bl.collect().toSet == expected)
+      // ... and computes the lineage once: the checkpoint write must not
+      // re-run it after the caller's first action
+      val evals = spark.sparkContext.longAccumulator("relbar-evals")
+      val counted = udf { (id: Long) => evals.add(1); id }.asNondeterministic()
+      val rows = CacheScope.barrierLazy(
+        spark.range(0, 1000, 1, 4).select(counted(col("id")).as("id")))
+      assert(rows.agg(sum("id")).head().getLong(0) == 499500L)
+      assert(rows.count() == 1000L)
+      assert(evals.value == 1000L, s"${evals.value} evaluations for 1000 rows")
+      // release deletes the checkpoint files, not just the blocks
+      CacheScope.releaseAll(spark)
+      assert(files(ckDir.toFile).isEmpty, "checkpoint files left after releaseAll")
     } finally {
       spark.conf.unset(CacheScope.ReliableBarrierConf)
       CacheScope.releaseAll(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(ckDir.toFile)
     }
   }
 

@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /**
  * IDN (internationalized domain name) wire-form conversion for URL hosts:
  * unicode labels become their RFC 3490/3492 `xn--` punycode ASCII form via
@@ -35,34 +29,4 @@ object Idn {
     }
     host
   }
-}
-
-/** Codegen'd IDN-to-ASCII column over a lowercased host string — the
-  * per-row work is one ASCII scan unless the host actually carries unicode
-  * ([[Idn.toAscii]]). */
-case class IdnAscii(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_idn_ascii"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a STRING child, got ${child.dataType.simpleString}")
-
-  def convert(s: UTF8String): UTF8String = {
-    val raw = s.toString
-    val out = Idn.toAscii(raw)
-    if (out eq raw) s else UTF8String.fromString(out)
-  }
-
-  override def nullSafeEval(s: Any): Any = convert(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("idn", this, classOf[IdnAscii].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.convert($s);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

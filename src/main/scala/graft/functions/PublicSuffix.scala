@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /**
  * Public-suffix-list rules + registrable-domain lookup
  * (publicsuffix.org algorithm): the leftmost-label-stripping search for the
@@ -91,33 +85,4 @@ object PublicSuffix {
     if (n <= psLen + 1) host
     else labels.slice(n - psLen - 1, n).mkString(".")
   }
-}
-
-/** Codegen'd registrable-domain column over a lowercased host string —
-  * probes the JVM-singleton [[PublicSuffix.bundled]] table (see the object
-  * doc for why that is the right broadcast shape for a with-the-jar
-  * artifact). */
-case class RegisteredDomain(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_registered_domain"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a STRING child, got ${child.dataType.simpleString}")
-
-  def lookup(s: UTF8String): UTF8String =
-    UTF8String.fromString(
-      PublicSuffix.registrable(s.toString, PublicSuffix.bundled))
-
-  override def nullSafeEval(s: Any): Any = lookup(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("psl", this, classOf[RegisteredDomain].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.lookup($s);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1289,25 +1289,11 @@ object Robots {
       // ([[graft.streaming.StreamingCrawl.linkCandidates]]) applies: a
       // blocked-domain / spam / over-length discovery must not enter the
       // frontier, let alone be fetched at the next hop (self-review r13).
-      // STAGED as one projection whose gate column is evaluation-pinned
-      // (r16, [[graft.functions.NondetIdentity]]): un-staged, the
-      // optimizer substituted the gate + normalization expressions into
-      // one fused consume (with the resolver inlined into each copy)
-      // whose generated method overflowed janino's 64 KB limit — the
-      // span failed compilation EVERY hop of EVERY run and executed
-      // interpreted (min-of-3 A/B: 1.91 s → 0.65 s for one hop's
-      // collapse at sf0.1). Rows are unchanged: the gate and the
-      // normalization are deterministic per link in truth, the pin only
-      // switches off duplication.
       val links = TextExtract.outlinks(fetched.select(
           lit(null).cast("long").as("doc_id"), col("url"), col("html")))
-      val staged = links.select(col("link"),
-        graft.functions.CodegenSplit.nondet(
-          UrlOps.filterReason(col("link"))).as("__r"),
-        UrlOps.parseNormalize(col("link")).getField("url_norm")
+      val cand = links.filter(UrlOps.filterReason(col("link")) === "ok")
+        .groupBy(UrlOps.parseNormalize(col("link")).getField("url_norm")
           .as("url_norm"))
-      val cand = staged.filter(col("__r") === "ok")
-        .groupBy(col("url_norm"))
         .agg(min(col("link")).as("url"))
       // Seen-set anti-join, INVERTED when the accumulated seen set is
       // genuinely large and the hop's candidates fit the broadcast

@@ -201,18 +201,10 @@ object TextExtract {
     val unquoted = regexp_extract_all(live,
       lit("(?is)<a\\b[^>]*?[\\s\"']href\\s*=\\s*([^\\s\"'>][^\\s>]*)"),
       lit(1))
-    // the resolver is PINNED to one evaluation site (r16,
-    // [[graft.functions.NondetIdentity]]): without the pin,
-    // filter-pushdown and project-collapsing substitute the ~40-regex
-    // resolution expression into every downstream consumer — the hop
-    // loop's fused link pipeline carried ~13 inlined copies per row, its
-    // single generated method overflowed janino's 64 KB limit, and the
-    // span re-attempted the doomed compile on every run, then executed
-    // interpreted. Pinned: one copy, one evaluation, spans compile.
     pages.select(col("doc_id"), col("url"),
         explode(concat(quoted, unquoted)).as("link_raw"))
-      .withColumn("link", graft.functions.CodegenSplit.nondet(
-        graft.ops.UrlOps.resolveUrl(col("url"), col("link_raw"))))
+      .withColumn("link",
+        graft.ops.UrlOps.resolveUrl(col("url"), col("link_raw")))
       .filter(col("link").isNotNull)
   }
 
@@ -261,32 +253,15 @@ object TextExtract {
     val unquoted = regexp_extract(tag,
       "(?is)[\\s\"']href\\s*=\\s*([^\\s\"'>][^\\s>]*)", 1)
     val raw = coalesce(nullif(quoted, lit("")), nullif(unquoted, lit("")))
-    val resolved = when(raw.isNull, lit(null).cast("string"))
-      .otherwise(graft.ops.UrlOps.resolveUrl(col("url"), raw))
-    // the canonical MATERIALIZES through a one-element explode — a
-    // Generate boundary Catalyst cannot collapse projections across
-    // (the outlinks idiom, deliberately): a plain select boundary gets
-    // inlined, and a downstream consumer like [[graft.ops.UrlOps
-    // .urlDedupCanonical]]'s parseNormalize references its input ~10×
-    // internally — duplicating THIS whole extract+resolve tree per
-    // mention multiplied expressions into a 133 MB task binary (measured;
-    // the executor OOM'd deserializing it). Post-Generate the consumer
-    // duplicates a leaf attribute instead. array(x) is always
-    // one-element, so no row is dropped — a page with no canonical
-    // emits its null.
-    //
-    // The resolution is computed in a PINNED projection BELOW the explode
-    // (r16, [[graft.functions.NondetIdentity]]): placed inside the
-    // generator expression, the resolver re-references its extracted
-    // argument ~20× internally and each reference re-inlines the whole
-    // tag-extraction tree — the generator alone generated 1.37M chars of
-    // code, overflowed janino's 64 KB method limit, and the span ran
-    // interpreted after a failed compile on EVERY run of every
-    // canonical-tier query. As a pinned projected column the chain is
-    // evaluated once with subexpression elimination, and the generator
-    // explodes a leaf attribute.
+    // the canonical materializes through a one-element explode, a Generate
+    // boundary Catalyst cannot push filters or collapse projections
+    // across: without it the optimized plan of
+    // [[graft.ops.UrlOps.webUrlCanonical]] carries 30 copies of the
+    // resolution, each with the whole tag-extraction tree (570 regexp
+    // calls), and its whole-stage method outgrows janino's 64 KB limit.
+    // array(x) is one-element, so a page with no canonical emits its null.
     pages.select(col("doc_id"), col("url"),
-        graft.functions.CodegenSplit.nondet(resolved).as("__resolved"))
+        graft.ops.UrlOps.resolveUrl(col("url"), raw).as("__resolved"))
       .select(col("doc_id"), col("url"),
         explode(array(col("__resolved"))).as("canonical"))
   }

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{graftbridge, Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{NormalizeUrl, ResolveUrl}
 
 /** URL-level operators — the stage BEFORE even [[TextExtract]] in a
   * web-corpus pipeline: CCNet/FineWeb-style recipes gate on the URL
@@ -10,11 +12,15 @@ import org.apache.spark.sql.functions._
   * REGISTERED domain (the registrable name one level below the public
   * suffix — the unit "one site" means for capping and blocklisting).
   *
-  * Everything here is EXPRESSION-ONLY per-row compute (regexp parses +
-  * array higher-order functions) except [[domains]]' one map-side-combining
-  * aggregation: at 100 TB the parse/normalize/filter verbs fuse into the
-  * scan ahead of the first exchange, exactly like [[TextExtract]], and the
-  * per-domain stats shuffle only (domain, count) pairs.
+  * Everything here is EXPRESSION-ONLY per-row compute except [[domains]]'
+  * one map-side-combining aggregation: at 100 TB the parse/normalize/filter
+  * verbs fuse into the scan ahead of the first exchange, exactly like
+  * [[TextExtract]], and the per-domain stats shuffle only (domain, count)
+  * pairs. URL normalization and RFC 3986 resolution are each ONE Catalyst
+  * expression ([[graft.functions.NormalizeUrl]],
+  * [[graft.functions.ResolveUrl]]) whose generated code is a single call,
+  * so a fused span that carries several of them stays far below janino's
+  * 64 KB method limit.
   *
   * The public-suffix handling is the REAL publicsuffix.org algorithm
   * ([[graft.functions.PublicSuffix]]): wildcard and exception rules over a
@@ -31,8 +37,8 @@ object UrlOps {
 
   /** Second-level public suffixes the FIXTURE corpus can reach (each also
     * a rule in the bundled PSL snapshot): `host = a.b.co.uk` registers
-    * `b.co.uk`, not `co.uk`. The oracle's bounded restatement of
-    * [[registeredDomain]]. */
+    * `b.co.uk`, not `co.uk`. The oracle's bounded restatement of the
+    * registered-domain rule. */
   val SecondLevelSuffixes: Seq[String] =
     Seq("co.uk", "org.uk", "ac.uk", "com.au", "co.jp", "com.br", "co.in")
 
@@ -46,42 +52,12 @@ object UrlOps {
   /** Maximum URL length [[urlFilter]] accepts. */
   val MaxUrlLength = 200
 
-  /** Tracking query parameters [[normalize]] strips: `utm_*`, `fbclid`,
-    * `gclid`. */
-  val TrackingParamPattern = "^(utm_[^=]*|fbclid|gclid)(=.*)?$"
-
   // ---- parsing -----------------------------------------------------------
-
-  private def schemeOf(url: Column): Column =
-    regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-
-  private def hostPortOf(url: Column): Column =
-    regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
-
-  private def pathOf(url: Column): Column =
-    regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
 
   /** The query component of a URL string (empty when absent) — exposed for
     * callers feeding [[Robots.robotsGate]]'s path+query match target. */
   private[graft] def queryOf(url: Column): Column =
     regexp_extract(url, "\\?([^#]*)", 1)
-
-  /** The registered (registrable) domain of an already-lowercased host —
-    * the full PSL algorithm (longest rule, `*` wildcards, `!` exceptions)
-    * as one codegen'd expression probing the JVM-singleton rule table
-    * ([[graft.functions.RegisteredDomain]]). */
-  def registeredDomain(host: Column): Column =
-    org.apache.spark.sql.graftbridge.column(
-      graft.functions.RegisteredDomain(
-        org.apache.spark.sql.graftbridge.expression(host)))
-
-  /** IDN wire form of an already-lowercased host — unicode labels become
-    * their `xn--` punycode spelling (JDK `java.net.IDN`), ASCII hosts pass
-    * through after one char scan ([[graft.functions.IdnAscii]]). */
-  def idnAscii(host: Column): Column =
-    org.apache.spark.sql.graftbridge.column(
-      graft.functions.IdnAscii(
-        org.apache.spark.sql.graftbridge.expression(host)))
 
   /** Parse + normalize, as one struct Column over a `url` string:
     * `(scheme, host, port, path, registered_domain, url_norm)`.
@@ -89,9 +65,10 @@ object UrlOps {
     * Normalization (the exact-dedup key for URLs): lowercase scheme and
     * host, strip a leading `www.`, drop the port when it is the scheme
     * default (http:80 / https:443), empty path becomes `/`, tracking
-    * params ([[TrackingParamPattern]]) are removed preserving the order of
-    * the rest, and the fragment is dropped entirely. `port` is null when
-    * the URL carries none.
+    * params (`utm_*`, `fbclid`, `gclid`) are removed preserving the order
+    * of the rest, and the fragment is dropped entirely. `port` is null when
+    * the URL carries none or one that does not fit an `Int`. A null `url`
+    * gives a struct of nulls.
     *
     * Stated simplifications (each deterministic, oracle-mirrored): a
     * schemeless/malformed URL parses to empty parts rather than erroring
@@ -100,60 +77,14 @@ object UrlOps {
     * (bracket-gated host/port split, the address is its own registered
     * domain) but are NOT RFC 5952-canonicalized — hex compares byte-wise
     * after lowercasing; IDN hosts collapse to their punycode wire form
-    * ([[idnAscii]] — both spellings key the same page; malformed labels
-    * pass through raw and fall back to the byte-wise-compare convention).
+    * ([[graft.functions.Idn]] — both spellings key the same page;
+    * malformed labels pass through raw and fall back to the
+    * byte-wise-compare convention).
     * The DuckDB oracle restates the ASCII-host behavior (identical on the
     * fixture domain — rendered hosts are ASCII; the IDN branch is
     * spec-witnessed). */
-  def parseNormalize(url: Column): Column = {
-    val scheme = lower(schemeOf(url))
-    // userinfo ("user:pass@") is stripped BEFORE the host/port split —
-    // otherwise the first-colon split reads "user" as the host, so the
-    // blocklist gate is bypassable via "http://u@spam-mirror.net/" and
-    // dedup/domains key on garbage (advisor r8, medium). Normalization
-    // drops userinfo from url_norm: two fetches of the same resource under
-    // different credentials ARE the same page for dedup purposes.
-    val hostPort = regexp_replace(hostPortOf(url), "^[^/@]*@", "")
-    // IPv6 bracket literals ("[2001:db8::1]:8080"): the address lives in
-    // brackets and the port comes after "]:" — the first-colon split would
-    // otherwise read "[2001" as the host. The host keeps its brackets (the
-    // URI authority form, so url_norm reconstructs verbatim); hex compares
-    // byte-wise after lowercasing — no RFC 5952 canonicalization (the
-    // exact-tier convention; "::1" vs "0:0:0:0:0:0:0:1" stay distinct).
-    val isV6 = substring(hostPort, 1, 1) === "["
-    val rawHost = when(isV6,
-        concat(lit("["),
-          lower(regexp_extract(hostPort, "^\\[([^\\]]*)\\]", 1)), lit("]")))
-      .otherwise(lower(regexp_extract(hostPort, "^([^:]*)", 1)))
-    val portStr = when(isV6,
-        regexp_extract(hostPort, "^\\[[^\\]]*\\]:([0-9]+)$", 1))
-      .otherwise(regexp_extract(hostPort, ":([0-9]+)$", 1))
-    val port = when(portStr === "", lit(null).cast("int"))
-      .otherwise(portStr.cast("int"))
-    // IDN: unicode labels collapse to their xn-- wire form so both
-    // spellings of a host key the same page (ASCII hosts — including the
-    // bracket-literal form — pass through on a one-char-scan fast path)
-    val host = idnAscii(regexp_replace(rawHost, "^www\\.", ""))
-    val path = pathOf(url)
-    val normPath = when(path === "", "/").otherwise(path)
-    val keptParams = filter(split(queryOf(url), "&"),
-      p => !(p.rlike(TrackingParamPattern)) && p =!= "")
-    val normQuery = when(size(keptParams) > 0,
-      concat(lit("?"), array_join(keptParams, "&"))).otherwise("")
-    val defaultPort = (scheme === "http" && port === 80) ||
-      (scheme === "https" && port === 443)
-    val portPart = when(port.isNull || defaultPort, "")
-      .otherwise(concat(lit(":"), port.cast("string")))
-    struct(
-      scheme.as("scheme"), host.as("host"), port.as("port"),
-      normPath.as("path"),
-      // an IP literal is its own "site" — no public-suffix rule applies,
-      // so domain-keyed caps/blocklists treat the address as the domain
-      when(isV6, host).otherwise(registeredDomain(host))
-        .as("registered_domain"),
-      concat(scheme, lit("://"), host, portPart, normPath, normQuery)
-        .as("url_norm"))
-  }
+  def parseNormalize(url: Column): Column =
+    graftbridge.column(NormalizeUrl(graftbridge.expression(url)))
 
   /** Parse/normalize over a `(doc_id, url)` frame →
     * `(doc_id, url, scheme, host, port, path, registered_domain,
@@ -294,13 +225,15 @@ object UrlOps {
       col("text"), col("lang"), col("source"))
   }
 
-  /** RFC 3986 §5 reference resolution for crawl outlinks, expression-only
-    * (fuses into the extraction scan — no UDF): resolve `link` (an `href`
-    * value) against the absolute `base` URL the page was fetched from.
+  /** RFC 3986 §5 reference resolution for crawl outlinks, one compiled
+    * expression (fuses into the extraction scan — no UDF): resolve `link`
+    * (an `href` value) against the absolute `base` URL the page was
+    * fetched from.
     *
     *   - empty / pure-fragment links → null (same-document references are
     *     not frontier candidates);
-    *   - absolute http(s) links pass through (fragment stripped);
+    *   - absolute http(s) links pass through (fragment stripped); one
+    *     with no `scheme://authority` (`http:g`, `https:/p`) → null;
     *   - other schemes (mailto:, javascript:, data:, tel:) → null — not
     *     fetchable page URLs;
     *   - protocol-relative `//host/p` inherits the base scheme (§4.2);
@@ -312,72 +245,13 @@ object UrlOps {
     *     residue left in place; real links never approach it), with
     *     above-root `../` clamped to `/` as the RFC prescribes.
     *
-    * Returns null for a base that is not an absolute URL (no origin to
-    * resolve against). The fragment is always dropped — [[parseNormalize]]
-    * would strip it anyway; doing it here keeps raw outlink rows joinable
-    * on equality. */
-  def resolveUrl(base: Column, link: Column): Column = {
-    // newline-tolerant strips throughout ([\s\S], not .): a multi-line
-    // href attribute value must not smuggle its fragment past the strip
-    val noFrag = regexp_replace(trim(link), "#[\\s\\S]*", "")
-    val scheme = lower(regexp_extract(noFrag,
-      "^([A-Za-z][A-Za-z0-9+.\\-]*):", 1))
-    val origin = regexp_extract(base,
-      "^([A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]+)", 1)
-    val baseScheme = regexp_extract(base,
-      "^([A-Za-z][A-Za-z0-9+.\\-]*)://", 1)
-    val basePath = regexp_extract(base,
-      "^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]+([^?#]*)", 1)
-    // §5.2.4 dot-segment removal, bounded unroll, applied to EVERY
-    // branch's path — absolute links included: a dotted spelling
-    // (https://x.com/a/../secret/) must not evade a robots prefix rule or
-    // duplicate a frontier row the clean spelling already owns. The
-    // /seg/../ collapse must not treat ".." itself as the consumed
-    // segment — hence the Java lookahead (RE2-less DuckDB never evaluates
-    // this: the fixture's links are dotless, so removal is identity there
-    // and the oracle states the origin+path concatenation directly — the
-    // engine still earns it through this general path).
-    def removeDots(p: Column): Column = {
-      val dots1 = (1 to 4).foldLeft(p)((c, _) =>
-        regexp_replace(c, "/\\./", "/"))
-      val dots2 = regexp_replace(dots1, "/\\.$", "/")
-      val dots3 = (1 to 8).foldLeft(dots2)((c, _) =>
-        regexp_replace(c, "/(?!\\.\\./)[^/]+/\\.\\./", "/"))
-      val dots4 = regexp_replace(dots3, "/(?!\\.\\./)[^/]+/\\.\\.$", "/")
-      regexp_replace(dots4, "^(/\\.\\.)+(/|$)", "/")
-    }
-    // absolute target (an absolute http(s) link, or a protocol-relative
-    // one re-anchored on the base scheme): decompose, clean the path,
-    // reassemble — origin and query pass through untouched
-    def absClean(target: Column): Column = {
-      val o = regexp_extract(target,
-        "^([A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]+)", 1)
-      val p = regexp_extract(target,
-        "^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]+([^?]*)", 1)
-      val q = regexp_extract(target, "(\\?[\\s\\S]*)$", 1)
-      concat(o, removeDots(p), q)
-    }
-    // the base's directory: path up to and including the last slash; an
-    // origin-only base resolves relatives against "/"
-    val baseDir = when(basePath === "", lit("/"))
-      .otherwise(regexp_replace(basePath, "/[^/]*$", "/"))
-    val relPath = regexp_extract(noFrag, "^([^?]*)", 1)
-    val relQuery = regexp_extract(noFrag, "(\\?[\\s\\S]*)$", 1)
-    val mergedPath = when(relPath.startsWith("/"), relPath)
-      .otherwise(concat(baseDir, relPath))
-    when(noFrag === "", lit(null).cast("string"))
-      // an absolute http(s) reference needs no base at all (§5.2.2) — it
-      // resolves even when the recorded fetch URL is malformed
-      .when(scheme === "http" || scheme === "https", absClean(noFrag))
-      .when(scheme =!= "", lit(null).cast("string"))
-      // every relative form below needs an absolute base to anchor on
-      .when(origin === "", lit(null).cast("string"))
-      .when(noFrag.startsWith("//"),
-        absClean(concat(baseScheme, lit(":"), noFrag)))
-      .when(noFrag.startsWith("?"),
-        concat(origin, when(basePath === "", "/").otherwise(basePath), noFrag))
-      .otherwise(concat(origin, removeDots(mergedPath), relQuery))
-  }
+    * A relative link against a null base or one that is not an absolute
+    * URL (no origin to resolve against) → null; a null link → null. The
+    * fragment is always dropped — [[parseNormalize]] would strip it
+    * anyway; doing it here keeps raw outlink rows joinable on equality. */
+  def resolveUrl(base: Column, link: Column): Column =
+    graftbridge.column(ResolveUrl(graftbridge.expression(base),
+      graftbridge.expression(link)))
 
   /** The composed fixture queries: render the stand-in URLs, then apply
     * each verb. */
@@ -408,26 +282,9 @@ object UrlOps {
     * guard (its `tgt_norm` nulls, so the node coalesces to the self
     * norm); spec-pinned for both tiers. */
   def urlDedupCanonical(pages: DataFrame): DataFrame = {
-    // the own-URL and declared-target parses are PINNED to one evaluation
-    // each (r16, [[graft.functions.NondetIdentity]]): the r15 form
-    // referenced the target parse three times and the self parse twice in
-    // one projection; fused into the canonicals Generate consume (a
-    // variable-based span Spark cannot split), the duplicated copies
-    // overflowed janino's 64 KB method limit and the span ran interpreted
-    // after a failed compile on every run. Rows unchanged — the wrappers
-    // are identities.
-    // the marker on doc_id additionally takes this projection OUT of
-    // whole-stage fusion with the extract+resolve span below it: even
-    // single-copy, the render+extract+resolve+two-parses chain in one
-    // variable-based method stays beyond 64 KB — unfused, the projection
-    // compiles through row-based per-operator codegen (splittable methods)
-    val parsed = pages.select(
-      graft.functions.CodegenSplit.marker(col("doc_id")).as("doc_id"),
-      col("canonical"),
-      graft.functions.CodegenSplit.nondet(
-        parseNormalize(col("url")).getField("url_norm")).as("__self"),
-      graft.functions.CodegenSplit.nondet(
-        parseNormalize(col("canonical"))).as("__t"))
+    val parsed = pages.select(col("doc_id"), col("canonical"),
+      parseNormalize(col("url")).getField("url_norm").as("__self"),
+      parseNormalize(col("canonical")).as("__t"))
     val tgtOk = col("canonical").isNotNull &&
       col("__t").getField("scheme") =!= "" && col("__t").getField("host") =!= ""
     dedupOnKeys(parsed.select(col("doc_id"),
@@ -490,22 +347,10 @@ object UrlOps {
   def urlDedupCanonicalChain(pages: DataFrame, maxHops: Int = 5): DataFrame = {
     require(maxHops >= 1, s"maxHops >= 1: $maxHops")
     // the malformed-declaration guard, identical to [[urlDedupCanonical]]:
-    // a target with no scheme or host reads as NO declaration. Both parses
-    // pinned to one evaluation (the urlDedupCanonical r16 note — the
-    // triple-referenced target parse overflowed the fused Generate span's
-    // 64 KB codegen method).
-    // the marker on doc_id additionally takes this projection OUT of
-    // whole-stage fusion with the extract+resolve span below it: even
-    // single-copy, the render+extract+resolve+two-parses chain in one
-    // variable-based method stays beyond 64 KB — unfused, the projection
-    // compiles through row-based per-operator codegen (splittable methods)
-    val parsed = pages.select(
-      graft.functions.CodegenSplit.marker(col("doc_id")).as("doc_id"),
-      col("canonical"),
-      graft.functions.CodegenSplit.nondet(
-        parseNormalize(col("url")).getField("url_norm")).as("__self"),
-      graft.functions.CodegenSplit.nondet(
-        parseNormalize(col("canonical"))).as("__t"))
+    // a target with no scheme or host reads as NO declaration
+    val parsed = pages.select(col("doc_id"), col("canonical"),
+      parseNormalize(col("url")).getField("url_norm").as("__self"),
+      parseNormalize(col("canonical")).as("__t"))
     val tgtOk = col("canonical").isNotNull &&
       col("__t").getField("scheme") =!= "" && col("__t").getField("host") =!= ""
     val base = CacheScope.trackEager(parsed.select(col("doc_id"),

@@ -3409,6 +3409,21 @@ class OpsSpec extends SparkSpec {
     assert(PublicSuffix.registrable(s"exc.$puny", rules) == s"exc.$puny")
   }
 
+  test("an oversize port is null, not a failed query") {
+    import graft.ops.UrlOps
+    val big = "http://x.example:99999999999/a"
+    val d = Seq((0L, big), (1L, "http://x.example/a")).toDF("doc_id", "url")
+    val u = UrlOps.urls(d).collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(u(0L).isNullAt(u(0L).fieldIndex("port")))
+    assert(u(0L).getAs[String]("url_norm") == "http://x.example/a")
+    assert(d.select(UrlOps.filterReason(col("url"))).as[String].collect()
+      .toSeq == Seq("ok", "ok"))
+    // the port drops out of url_norm, so both spellings dedup to one
+    val dd = UrlOps.urlDedup(d).collect().map(r => r.getAs[Long]("doc_id") ->
+      r.getAs[Long]("keep_id")).toMap
+    assert(dd == Map(0L -> 0L, 1L -> 0L))
+  }
+
   test("urlDedup collapses normalization-identical aliases") {
     import graft.ops.UrlOps
     val d = Seq(
@@ -3450,7 +3465,9 @@ class OpsSpec extends SparkSpec {
       ("//cdn.example/a/./b", "https://cdn.example/a/b"),
       // non-frontier references drop
       ("#frag", null), ("", null),
-      ("mailto:x@y.example", null), ("javascript:void(0)", null))
+      ("mailto:x@y.example", null), ("javascript:void(0)", null),
+      // an http(s) link with no authority is not fetchable either
+      ("http:g", null), ("https:/p", null), ("HTTP:x?q=1", null))
     val got = cases.map(_._1).toDF("link")
       .select(col("link"),
         UrlOps.resolveUrl(lit(base), col("link")).as("resolved"))
@@ -4331,27 +4348,11 @@ class OpsSpec extends SparkSpec {
     } finally {
       spark.conf.unset(CacheScope.ReliableBarrierConf)
       CacheScope.releaseAll(spark)
+      org.apache.spark.GraftTestAccess.clearCheckpointDir(spark.sparkContext)
       org.apache.commons.io.FileUtils.deleteDirectory(ckDir.toFile)
     }
-  }
-
-  test("NondetIdentity pins evaluation without changing values") {
-    val spark2 = spark; import spark2.implicits._
-    // range, not a LocalRelation: local relations are folded eagerly by the
-    // optimizer and would vacuously satisfy the plan assertion below
-    val df = spark.range(1).select(
-      concat(lit("https://x.example/p/"), col("id")).as("url"),
-      lit("/b").as("link_raw"))
-    val pinned = df.select(graft.functions.CodegenSplit.nondet(
-      graft.ops.UrlOps.resolveUrl(col("url"), col("link_raw"))).as("link"))
-    val plain = df.select(graft.ops.UrlOps.resolveUrl(col("url"),
-      col("link_raw")).as("link"))
-    assert(pinned.collect().toSeq == plain.collect().toSeq)
-    // declared non-deterministic: a filter above must NOT substitute the
-    // resolver into itself (one copy in the optimized plan, in the project)
-    val gated = pinned.filter(col("link").isNotNull)
-    val optimized = gated.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("nondet_identity"))
+    // the shared context no longer points at the deleted dir
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
   test("bucketed layout detected structurally when the marker file is absent") {

@@ -31,12 +31,16 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  * the four topics via batch Kafka writes
  * ([[StreamingAnalyzer.unified]]/[[StreamingAnalyzer.fanOut]]) — the
  * compute-once-and-branch shape of the reference
- * (DeadLetterAnalyzerTopology.java:139-158). Honest caveat: the unified plan
- * forks the parsed source into a stateless branch and a stateful branch, and
- * Spark cannot persist upstream of a stateful streaming operator, so each
- * micro-batch's offset range is scanned/decoded twice within the one query —
- * versus 4 source reads and 3 duplicate state stores in the pre-unified
- * layout, and versus once in Kafka Streams' record-at-a-time fork.
+ * (DeadLetterAnalyzerTopology.java:139-158). Each micro-batch's offset range
+ * is scanned and decoded once: the rendered sink rows ride through the one
+ * stateful exchange beside the fields the statistics need (the shuffle trade
+ * is stated at [[StreamingAnalyzer.unified]]). A checkpoint of the earlier
+ * plan, which decoded each record twice, restarts on this one through
+ * [[migrateTwoScanCheckpoint]].
+ *
+ * The Kafka connector (`spark-sql-kafka-0-10`) is not part of the Spark
+ * distribution; without it [[topology]] fails at construction with a
+ * message naming the artifact to add.
  */
 object AnalyzerMain {
 
@@ -169,7 +173,9 @@ object AnalyzerMain {
     * analyzed by Catalyst); nothing starts until `.start()`. */
   def topology(spark: SparkSession, cfg: Config): DataStreamWriter[Row] = {
     implicit val dc: graft.functions.DecodeConfig = cfg.decodeConfig
-    val input = DeadLetterSource.kafka(spark, cfg.brokers, cfg.inputPattern)
+    val input = requireKafkaConnector(spark) {
+      DeadLetterSource.kafka(spark, cfg.brokers, cfg.inputPattern)
+    }
     val topicOf = Map(
       "all" -> cfg.outputTopic, "stats" -> cfg.statsTopic,
       "examples" -> cfg.examplesTopic, "errors" -> cfg.errorTopic)
@@ -183,6 +189,22 @@ object AnalyzerMain {
         .save()
     }
   }
+
+  /** Run `body`, turning Spark's "data source not found" for `kafka` into a
+    * message that names the missing connector artifact and the version to
+    * match. Spark 4.1 reports a missing `kafka` provider as
+    * `_LEGACY_ERROR_TEMP_1140` (an `AnalysisException`). */
+  private def requireKafkaConnector[T](spark: SparkSession)(body: => T): T =
+    try body catch {
+      case e: Throwable with org.apache.spark.SparkThrowable
+          if e.getCondition == "_LEGACY_ERROR_TEMP_1140" =>
+        val scalaBinary =
+          scala.util.Properties.versionNumberString.split('.').take(2).mkString(".")
+        throw new IllegalStateException(
+          "the Kafka connector is not on the classpath: add " +
+            s"org.apache.spark:spark-sql-kafka-0-10_$scalaBinary:${spark.version} " +
+            "(e.g. spark-submit --packages) to run the dead-letter analyzer", e)
+    }
 
   /** Refuse to silently discard pre-unified state. The four-query layout
     * checkpointed each sink under `$dir/<sink>`; the unified query
@@ -206,6 +228,52 @@ object AnalyzerMain {
           "fresh, or point --checkpoint-dir at a new location.")
   }
 
+  /** Carry a unified checkpoint of the earlier two-scan plan over to the
+    * one-scan plan, Kafka offsets and statistics state intact. That plan
+    * forked the parsed source into a stateless and a stateful branch, so
+    * Spark logged its one source twice: each offset-log entry
+    * (`offsets/<batch>`: a version line, a metadata line, then one offset
+    * line per source) holds two identical offset lines, and Spark refuses to
+    * restart a query whose source count changed. The state schemas already
+    * match. Each such entry is rewritten atomically with one offset line;
+    * one-line entries are left alone, so running this again is a no-op. Two
+    * different offset lines would mean the branches had read different
+    * ranges, so that no one offset keeps both the sinks and the state
+    * exact: that fails before the query starts. */
+  def migrateTwoScanCheckpoint(spark: SparkSession, dir: String): Unit = {
+    val offsets = new org.apache.hadoop.fs.Path(dir, "offsets")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = offsets.getFileSystem(conf)
+    if (fs.exists(offsets)) {
+      val files = org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(offsets, conf)
+      fs.listStatus(offsets).map(_.getPath)
+        .filter(p => p.getName.nonEmpty && p.getName.forall(_.isDigit))
+        .foreach { entry =>
+          val in = fs.open(entry)
+          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+            .getLines().toVector finally in.close()
+          lines.drop(2) match {
+            case Seq(_) => ()
+            case Seq(a, b) if a == b =>
+              val out = files.createAtomic(entry, true)
+              try out.write(lines.take(3).mkString("\n").getBytes("UTF-8"))
+              catch { case e: Throwable => out.cancel(); throw e }
+              out.close()
+            case sources =>
+              throw new IllegalStateException(
+                s"offset-log entry $entry logs ${sources.size} source " +
+                  "offsets, not one source once or twice with one offset; " +
+                  "the analyzer reads one source, and no single offset keeps " +
+                  "both its sinks and its statistics state exact. Move the " +
+                  "checkpoint aside to start fresh " +
+                  "(Kafka offsets and statistics state reset), or point " +
+                  "--checkpoint-dir at a new location.")
+          }
+        }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
     val builder = SparkSession.builder()
@@ -216,6 +284,7 @@ object AnalyzerMain {
       .getOrElse(builder)
       .getOrCreate()
     assertCheckpointLayout(spark, cfg.checkpointDir)
+    migrateTwoScanCheckpoint(spark, cfg.checkpointDir)
     topology(spark, cfg).queryName("dead-letter-analyzer").start()
     spark.streams.awaitAnyTermination()
   }

@@ -6,8 +6,8 @@ import graft.functions.{BruteForce, Classify}
 import graft.model.Messages
 import graft.plans.Analyzer
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.{graftbridge, Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -32,9 +32,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
  */
 object StreamingAnalyzer {
 
-  /** One enriched record at the stateful boundary (kept narrow: only what the
-    * stats/examples sinks need — the deserialized-object stage should carry
-    * minimal columns, everything wide stays in the codegen'd stages). */
+  /** The fields of one classified record that the aggregate reads: only
+    * what the stats/examples sinks and an aggregate-error row need. In
+    * [[unified]] these ride beside the rendered sink row (see [[Carried]]);
+    * only they are buffered per group. */
   final case class Enriched(
       topic: String, errorType: String, key: String, offset: Long,
       partition: Int, timestampUs: Long, description: String)
@@ -150,37 +151,86 @@ object StreamingAnalyzer {
       Analyzer.formatTimestamp(col("timestamp")).as("timestamp"),
       col("dead_letter"), col("topic"), col("error_type").as("type"))
 
-    val results = statResults(good, onAggRecord, stateTtlMs)
+    // the stateful stage: narrow projection → one `groupBy` exchange →
+    // `flatMapGroupsWithState`
+    val stats = statsInput(col("topic"), col("error_type"), col("key_string"),
+      col("dead_letter"))
+    val results = good
+      .select(stats.fields :+ stats.key1.as("_1") :+ stats.key2.as("_2"): _*)
+      .groupBy(col("_1"), col("_2"))
+      .as[(String, String), Enriched](StateKey, Encoders.product[Enriched])
+      .flatMapGroupsWithState(OutputMode.Append, timeoutOf(stateTtlMs))(
+        aggregateWith(onAggRecord, stateTtlMs))(
+        Encoders.product[StatsState], Encoders.product[StatResult])
+      .toDF()
 
     val errors = Analyzer.errorsOf(parseErrors, analyzeErrors)
       .unionByName(aggregateErrors(results))
     StreamingOutputs(all, results, errors)
   }
 
-  /** The stateful stage: narrow projection → one `groupByKey` exchange →
-    * `flatMapGroupsWithState`. Shared by [[analyze]] and [[unified]]. */
-  private def statResults(good: DataFrame, onAggRecord: Enriched => Unit,
-      stateTtlMs: Option[Long]): DataFrame = {
-    implicit val enc = Encoders.product[Enriched]
-    val narrow: Dataset[Enriched] = good.select(
-      col("topic"), col("error_type").as("errorType"), col("key_string").as("key"),
-      col("offset"), col("partition"), unix_micros(col("timestamp")).as("timestampUs"),
-      col("dead_letter").getField("description").as("description")).as[Enriched]
+  /** A classified record's input to the statistics state: its [[Enriched]]
+    * fields as named columns and its state key `(_1, _2) = (topic, errorType)`,
+    * built from the record's topic, error type, rendered key and dead letter.
+    * [[analyze]] and [[unified]] both group by these, so the key columns
+    * match the state key schema that checkpoints hold: [[StateKey]]'s two
+    * nullable strings, whatever nullability the input declares. */
+  private final case class StatsInput(fields: Seq[Column], key1: Column, key2: Column)
 
-    val timeout =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    narrow
-      .groupByKey(r => (r.topic, r.errorType))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        aggregateWith(onAggRecord, stateTtlMs))(
-        Encoders.product[StatsState], Encoders.product[StatResult])
-      .toDF()
+  private def statsInput(topic: Column, errorType: Column, keyString: Column,
+      deadLetter: Column): StatsInput = {
+    def nullable(c: Column) = graftbridge.column(KnownNullable(graftbridge.expression(c)))
+    StatsInput(
+      Seq(topic.as("topic"), errorType.as("errorType"), keyString.as("key"),
+        col("offset"), col("partition"),
+        unix_micros(col("timestamp")).as("timestampUs"),
+        deadLetter.getField("description").as("description")),
+      nullable(topic), nullable(errorType))
   }
+
+  private val StateKey = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+
+  private def timeoutOf(stateTtlMs: Option[Long]): GroupStateTimeout =
+    if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+    else GroupStateTimeout.NoTimeout
 
   /** Fan-out order of the four sinks. */
   val SinkNames: Seq[String] = Seq("all", "stats", "examples", "errors")
+
+  /** One record of the [[unified]] frame, named as the frame's columns. */
+  final case class SinkRow(sink: String, key: String, value: Array[Byte],
+      dedup_id: String)
+
+  /** A parsed branch row on its way into the stateful exchange: its rendered
+    * stateless sink row (`all`, or `errors` for a parse or analyze failure)
+    * and, for a classified record only, the narrow [[Enriched]] fields the
+    * aggregate needs. */
+  final case class Carried(row: SinkRow, enriched: Option[Enriched])
+
+  /** One row out of the stateful operator: a carried sink row passed
+    * through, or one per-record aggregate result. */
+  final case class Emitted(row: Option[SinkRow], result: Option[StatResult])
+
+  /** The per-group function of [[unified]]. Each carried sink row is
+    * emitted as it is pulled from the group iterator, so the rendered
+    * payloads stream through; only the narrow fields are buffered, and
+    * [[aggregateWith]] then runs over them in `(timestamp, offset)` order.
+    * A pass-only group (parse and analyze errors) carries no narrow fields,
+    * so it emits its rows and never touches state. */
+  def passAndAggregate(onRecord: Enriched => Unit,
+      stateTtlMs: Option[Long] = None)(
+      key: (String, String), rows: Iterator[Carried],
+      state: GroupState[StatsState]): Iterator[Emitted] = {
+    val narrow = scala.collection.mutable.ArrayBuffer.empty[Enriched]
+    val passed = rows.map { c =>
+      c.enriched.foreach(narrow += _)
+      Emitted(Some(c.row), None)
+    }
+    // `++` takes its argument by name: the aggregate runs once the carried
+    // rows are drained
+    passed ++ aggregateWith(onRecord, stateTtlMs)(key, narrow.iterator, state)
+      .map(r => Emitted(None, Some(r)))
+  }
 
   /** The WHOLE topology as ONE streaming frame: every output record tagged
     * with its sink name, shaped
@@ -193,21 +243,39 @@ object StreamingAnalyzer {
     * query consumes the source 4× and keeps 3 independent copies of the
     * statistics state under separate checkpoints, diverging on recovery.)
     *
-    * Plan shape: the source forks exactly twice. One STATELESS pass emits the
-    * `all` rows and both stateless error channels from a single case
-    * projection (each input row lands in exactly one branch). One STATEFUL
-    * pass feeds `flatMapGroupsWithState`; its subtree is referenced EXACTLY
-    * ONCE — each StatResult row explodes into its stats row, optional example
-    * row, and optional aggregate-error row. Filtering the result stream three
-    * times (as the per-sink projections do in per-query mode) would plant
-    * three independent state stores in one plan, tripling state writes. */
+    * Plan shape: one path from the source scan to the sinks, so each record
+    * is decoded once. One projection over [[Analyzer.parsed]] renders each
+    * branch row's stateless sink row and its narrow [[Enriched]] fields;
+    * one `groupBy(topic, type)` exchange feeds `flatMapGroupsWithState`
+    * ([[passAndAggregate]]), which passes the carried rows through and
+    * emits the per-record results; each result row then explodes into its
+    * stats row, optional example row and optional aggregate-error row. A
+    * pass-only row is keyed `(elastic id, null)`: a key no classified record
+    * has, spread across tasks rather than funnelled into one, and one that
+    * never holds state. The state key `(_1, _2)` and value schemas are
+    * byte-identical to those of [[analyze]] (both group by [[statsInput]]).
+    *
+    * The trade: the rendered rows, not only the narrow fields, cross the
+    * exchange (LZ4-compressed shuffle). Kafka Streams repartitions only the
+    * narrow stream; here that would cost a second decode of every record.
+    * The exchange places each classified record's rendered `all` row in the
+    * task of its `(topic, type)` key, so this pays off when a batch's
+    * records spread over many keys (perfbench `dl-flood`: ~6.4 k classified
+    * records of an 8 k-row trigger over ~2.2 k keys, the largest holding
+    * under 1 %). When one key dominates — a flood from one failing service
+    * with one error type — one task deserializes, re-serializes and writes
+    * nearly the whole batch's payload. */
   def unified(input: DataFrame, onAggRecord: Enriched => Unit = _ => (),
       stateTtlMs: Option[Long] = None)(
       implicit dc: graft.functions.DecodeConfig): DataFrame = {
-    val p = Analyzer.parsed(input)
     val err = col("parsed").getField("error")
     val dl = col("parsed").getField("dead_letter")
     val stackTrace = dl.getField("cause").getField("stack_trace")
+    // the classifier's regexes run once per row: CollapseProject does not
+    // inline a non-cheap expression into a projection that uses it 3×
+    val p = Analyzer.parsed(input).withColumn("__type", Classify.classify(stackTrace))
+    val errorType = col("__type")
+    val classified = err.isNull && stackTrace.isNotNull
     val keyString = coalesce(BruteForce.stringified(col("key")), lit("null"))
     // dedup_id: a DETERMINISTIC per-record identity, identical on replay —
     // source-derived rows use the elastic id of the input record; stateful
@@ -220,30 +288,38 @@ object StreamingAnalyzer {
       struct(lit(sink).as("sink"), key.as("key"),
         value.cast("binary").as("value"), dedupId.as("dedup_id"))
 
-    // Stateless pass — the SAME dead-letter builders as Analyzer.errorsOf
+    // Stateless rows — the SAME dead-letter builders as Analyzer.errorsOf
     // (one definition; parity drift between batch and streaming would
-    // otherwise go unnoticed until a sink diff), fused into one per-row
-    // case so the parse pipeline runs once.
+    // otherwise go unnoticed until a sink diff), one per-row case.
     val parseDl = Analyzer.parseErrorDl(err, col("value"), col("timestamp"))
     val analyzeDl = Analyzer.analyzeErrorDl(
       Analyzer.enrichErrorMessage(stackTrace), dl, col("timestamp"))
     val allValue = to_json(struct(
       keyString.as("context_key"), col("offset"), col("partition"),
       Analyzer.formatTimestamp(col("timestamp")).as("timestamp"),
-      dl.as("dead_letter"), col("topic"),
-      Classify.classify(stackTrace).as("type")))
+      dl.as("dead_letter"), col("topic"), errorType.as("type")))
     val sourceId = Analyzer.elasticId(col("topic"), col("partition"), col("offset"))
-    val stateless = p.select(
+    val stats = statsInput(col("topic"), errorType, keyString, dl)
+    val carried = p.select(
       when(err.isNotNull, row("errors", keyString, to_json(parseDl), sourceId))
         .when(stackTrace.isNull,
           row("errors", keyString, to_json(analyzeDl), sourceId))
         .otherwise(row("all", sourceId, allValue, sourceId))
-        .as("r"))
+        .as("row"),
+      when(classified, struct(stats.fields: _*)).as("enriched"),
+      when(classified, stats.key1).otherwise(sourceId).as("_1"),
+      when(classified, stats.key2).as("_2"))
 
-    // Stateful pass — referenced once; per-result-row 1→N expansion.
-    val good = Analyzer.enriched(p.filter(err.isNull))
-      .filter(col("enrich_error").isNull)
-    val results = statResults(good, onAggRecord, stateTtlMs)
+    val emitted = carried
+      .groupBy(col("_1"), col("_2"))
+      .as[(String, String), Carried](StateKey, Encoders.product[Carried])
+      .flatMapGroupsWithState(OutputMode.Append, timeoutOf(stateTtlMs))(
+        passAndAggregate(onAggRecord, stateTtlMs))(
+        Encoders.product[StatsState], Encoders.product[Emitted])
+      .toDF()
+      .select(col("row"), col("result.*"))
+
+    val isResult = col("row").isNull
     val statsKey = Analyzer.errorKeyString(col("topic"), col("errorType"))
     val examplesValue = to_json(struct(
       col("exampleKey"), col("exampleOffset"), col("examplePartition"),
@@ -256,9 +332,10 @@ object StreamingAnalyzer {
       message = col("aggError.message"),
       inputValue = col("aggError.inputValue"),
       timestamp = timestamp_micros(col("aggError.timestampUs")))
-    val fromResults = results.select(
+    emitted.select(
       explode(array_compact(array(
-        when(col("aggError").isNull, row("stats", statsKey,
+        col("row"),
+        when(isResult && col("aggError").isNull, row("stats", statsKey,
           statsAvroEncode(col("count"),
             Analyzer.formatTimestamp(timestamp_micros(col("createdUs"))),
             Analyzer.formatTimestamp(timestamp_micros(col("updatedUs"))),
@@ -274,8 +351,6 @@ object StreamingAnalyzer {
             Analyzer.elasticId(col("topic"), col("aggError.partition"),
               col("aggError.offset")))))))
         .as("r"))
-
-    stateless.unionByName(fromResults)
       .select(col("r.sink").as("sink"), col("r.key").as("key"),
         col("r.value").as("value"), col("r.dedup_id").as("dedup_id"))
   }
@@ -284,9 +359,20 @@ object StreamingAnalyzer {
     * micro-batch out to the four sinks through `write(sinkName, frame)` where
     * `frame` is the batch's `(key string, value binary)` slice for that sink
     * (production: a batch Kafka write per topic; tests: an in-memory
-    * collector). The batch is persisted before the per-sink filters — load
-    * bearing: without it each sink's action re-executes the batch plan,
-    * re-running the source scan and re-applying the state updates.
+    * collector). The batch is cut from its lineage (`localCheckpoint`, lazy)
+    * before the per-sink filters: the first sink write computes the
+    * micro-batch once — source scan, decode, state updates — and leaves its
+    * rows as executor blocks; the other three read that leaf instead of
+    * shipping the micro-batch plan to every task. The blocks are released
+    * when the batch's writes end.
+    *
+    * The cut trades fault tolerance inside a batch: persisted blocks could be
+    * recomputed from lineage, checkpointed ones cannot. If an executor
+    * holding some of them is lost between two sink writes (preemption,
+    * dynamic allocation), the next write fails ("checkpoint block not
+    * found"), the query stops, and a restart replays the batch under the
+    * replay-idempotence contract below (StreamingSpec pins this by dropping
+    * the blocks between writes).
     *
     * Replay idempotence: sink writes and Spark's offset commit are not
     * atomic, so a crash BETWEEN them replays the batch on restart — the
@@ -308,14 +394,11 @@ object StreamingAnalyzer {
     unified.writeStream.outputMode(OutputMode.Append).foreachBatch {
       (batch: Dataset[Row], id: Long) => {
         runBatchOnce(batch.sparkSession, checkpointDir, id) {
-          batch.persist()
+          val cut = batch.localCheckpoint(eager = false)
           try SinkNames.foreach { name =>
-            write(name, batch.filter(col("sink") === name)
+            write(name, cut.filter(col("sink") === name)
               .select("key", "value", "dedup_id"))
-          } finally {
-            batch.unpersist()
-            ()
-          }
+          } finally graftbridge.checkpointRdd(cut).foreach(_.unpersist(blocking = false))
         }
         ()
       }

@@ -172,6 +172,128 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("unified topology decodes each record once: one source scan, one stateful operator") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+    val stream = MemoryStream[KafkaRecord]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-shape").toString
+    val q = StreamingAnalyzer.fanOut(StreamingAnalyzer.unified(stream.toDF()), ckpt) {
+      (_, frame) => frame.collect(); ()
+    }.queryName("one_scan_topo").start()
+    try {
+      stream.addData(
+        record(0, 1000, "k0", Fixtures.StackTrace),
+        record(1, 2000, "bad", null))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      // the other leaf is the stateful operator's (empty) initial-state relation
+      assert(plan.collectLeaves().count(_.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec]) == 1,
+        plan.toString)
+      assert(plan.collect {
+        case s: org.apache.spark.sql.execution.streaming.operators.stateful
+            .flatmapgroupswithstate.FlatMapGroupsWithStateExec => s
+      }.size == 1, plan.toString)
+    } finally q.stop()
+  }
+
+  test("fanOut's four sink writes run the stateful operator once per record") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+    val stream = MemoryStream[KafkaRecord]
+    StreamingSpec.aggRecords.set(0)
+    val unified = StreamingAnalyzer.unified(stream.toDF(),
+      onAggRecord = _ => { StreamingSpec.aggRecords.incrementAndGet(); () })
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-evals").toString
+    val rows = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val q = StreamingAnalyzer.fanOut(unified, ckpt) { (name, frame) =>
+      rows.merge(name, frame.collect().length, (a: Integer, b: Integer) => a + b); ()
+    }.queryName("eval_count_topo").start()
+    try {
+      var offset = 0L
+      for (batch <- 1 to 3) {
+        stream.addData((0 until 4).map { i =>
+          offset += 1
+          record(offset, offset * 1000, s"k$batch-$i",
+            if (i == 3) null else Fixtures.StackTrace)
+        }: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    // 3 batches x 3 classified records; each aggregated exactly once
+    assert(StreamingSpec.aggRecords.get == 9)
+    assert(rows.get("all") == 9 && rows.get("stats") == 9, rows.toString)
+    assert(rows.get("examples") == 1 && rows.get("errors") == 3, rows.toString)
+  }
+
+  private def carried(offset: Long, key: String) = StreamingAnalyzer.Carried(
+    StreamingAnalyzer.SinkRow("all", s"t+0+$offset", Fixtures.utf8(s"{\"k\":\"$key\"}"),
+      s"t+0+$offset"),
+    Some(StreamingAnalyzer.Enriched("t", "cls", key, offset, 0, offset * 1000L, "d")))
+
+  private def emptyState() = {
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    TestGroupState.create[StreamingAnalyzer.StatsState](
+      org.apache.spark.api.java.Optional.empty[StreamingAnalyzer.StatsState](),
+      GroupStateTimeout.NoTimeout, 1000L,
+      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
+  }
+
+  test("per-group function: a pass-only group emits its rows and never touches state") {
+    val errRow = StreamingAnalyzer.SinkRow("errors", "bad", Fixtures.utf8("{}"), "t+0+7")
+    val state = emptyState()
+    val out = StreamingAnalyzer.passAndAggregate(_ => ())(
+      ("t+0+7", null), Iterator(StreamingAnalyzer.Carried(errRow, None)), state).toList
+    assert(out == List(StreamingAnalyzer.Emitted(Some(errRow), None)))
+    assert(!state.exists && !state.isUpdated && !state.isRemoved)
+  }
+
+  test("per-group function: carried rows stream through, only the narrow fields buffer") {
+    val state = emptyState()
+    var pulled = 0
+    val in = Iterator.tabulate(3) { i => pulled += 1; carried(2L - i, s"k$i") }
+    val out = StreamingAnalyzer.passAndAggregate(_ => ())(("t", "cls"), in, state)
+    val first = out.next()
+    assert(pulled <= 1)
+    assert(first.row.exists(_.sink == "all") && first.result.isEmpty)
+    val rest = out.toList
+    assert(pulled == 3)
+    val results = rest.flatMap(_.result)
+    assert(rest.count(_.row.isDefined) == 2 && results.map(_.count) == Seq(1, 2, 3))
+    // aggregated in (timestamp, offset) order: offset 0 is the first example
+    assert(results.head.exampleKey.contains("k2") && results.head.exampleOffset.contains(0L))
+    assert(state.get.count == 3)
+  }
+
+  test("per-group function: a poisoned record still emits its all row and an aggregate error") {
+    val state = emptyState()
+    val poison = carried(5L, "poison")
+    val out = StreamingAnalyzer.passAndAggregate(r =>
+      if (r.key == "poison") throw new IllegalStateException("boom"))(
+      ("t", "cls"), Iterator(poison), state).toList
+    assert(out.length == 2)
+    assert(out.head == StreamingAnalyzer.Emitted(Some(poison.row), None))
+    val err = out(1).result.flatMap(_.aggError)
+    assert(out(1).row.isEmpty && err.exists(e =>
+      e.recordKey == "poison" && e.message == "boom"), out.toString)
+    assert(!state.exists)
+  }
+
+  test("production topology fails at construction without the Kafka connector") {
+    assume(scala.util.Try(
+      Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider")).isFailure,
+      "the Kafka connector is on the classpath")
+    val cfg = AnalyzerMain.parseArgs(Array(
+      "--brokers", "localhost:9092", "--input-pattern", ".*-dead-letters",
+      "--output-topic", "out", "--error-topic", "err",
+      "--checkpoint-dir", java.nio.file.Files.createTempDirectory("ckpt-kafka").toString))
+    val e = intercept[IllegalStateException](AnalyzerMain.topology(spark, cfg))
+    assert(e.getMessage.contains(s"spark-sql-kafka-0-10_2.13:${spark.version}"), e.getMessage)
+  }
+
   test("crash mid-batch: replayed writes collapse by dedup_id (exactly-once effect)") {
     // the residual window the per-batch commit markers leave: a crash in the
     // MIDDLE of the four sink writes replays the whole batch. Every sink row
@@ -390,6 +512,130 @@ class StreamingSpec extends SparkSpec {
     // and a fresh directory is fine
     val fresh = java.nio.file.Files.createTempDirectory("ckpt2").toFile
     AnalyzerMain.assertCheckpointLayout(spark, fresh.getAbsolutePath)
+  }
+
+  /** The source offset lines of each offset-log entry under `ckpt`. */
+  private def loggedOffsets(ckpt: String): Seq[Seq[String]] =
+    new java.io.File(ckpt, "offsets").listFiles().toSeq
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong).map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().drop(2).toList finally src.close()
+      }
+
+  test("a two-scan checkpoint restarts on the one-scan plan with its state intact") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+    val stream = MemoryStream[KafkaRecord]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-two-scan").toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def start(topology: org.apache.spark.sql.DataFrame, name: String) =
+      StreamingAnalyzer.fanOut(topology, ckpt) { (sink, frame) =>
+        frame.collect().foreach(r => seen.add(sink -> r.getAs[String]("dedup_id"))); ()
+      }.queryName(name).start()
+    // the two-scan plan's shape: the source forked into a stateless branch
+    // and the stateful one, unioned
+    val outs = StreamingAnalyzer.analyze(stream.toDF())
+    val twoScan = outs.all
+      .select(lit("all").as("sink"), col("key"),
+        col("context_key").cast("binary").as("value"), col("key").as("dedup_id"))
+      .unionByName(outs.results.select(lit("stats").as("sink"), col("topic").as("key"),
+        col("count").cast("string").cast("binary").as("value"),
+        concat(col("errorType"), lit(":"), col("count").cast("string")).as("dedup_id")))
+    val q1 = start(twoScan, "two_scan_topo")
+    try {
+      stream.addData(
+        record(0, 1000, "k0", Fixtures.StackTrace),
+        record(1, 2000, "k1", Fixtures.StackTrace))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val logged = loggedOffsets(ckpt)
+    assert(logged.nonEmpty && logged.forall(l => l.size == 2 && l.distinct.size == 1),
+      logged.toString)
+
+    AnalyzerMain.migrateTwoScanCheckpoint(spark, ckpt)
+    assert(loggedOffsets(ckpt) == logged.map(_.take(1)))
+    AnalyzerMain.migrateTwoScanCheckpoint(spark, ckpt) // a no-op once migrated
+    assert(loggedOffsets(ckpt) == logged.map(_.take(1)))
+
+    seen.clear()
+    val q2 = start(StreamingAnalyzer.unified(stream.toDF()), "two_scan_resumed")
+    try {
+      stream.addData(record(2, 3000, "k2", Fixtures.StackTrace))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    import scala.jdk.CollectionConverters._
+    val resumed = seen.asScala.toList
+    // the key's count continues from the checkpointed state, and its first
+    // example was already emitted before the restart
+    assert(resumed.filter(_._1 == "stats").map(_._2.split(':').last) == Seq("3"),
+      resumed.toString)
+    assert(!resumed.exists(_._1 == "examples"), resumed.toString)
+    assert(resumed.count(_._1 == "all") == 1, resumed.toString)
+  }
+
+  test("offset-log migration leaves one-source entries alone and refuses differing offsets") {
+    def ckpt(sourceOffsets: String*) = {
+      val root = java.nio.file.Files.createTempDirectory("ckpt-scans")
+      val offsets = java.nio.file.Files.createDirectories(root.resolve("offsets"))
+      java.nio.file.Files.writeString(offsets.resolve("0"),
+        ("v1" +: """{"batchWatermarkMs":0}""" +: sourceOffsets).mkString("\n"))
+      root.toString
+    }
+    val one = ckpt("""{"logOffset":0}""")
+    AnalyzerMain.migrateTwoScanCheckpoint(spark, one)
+    assert(loggedOffsets(one) == Seq(Seq("""{"logOffset":0}""")))
+    val e = intercept[IllegalStateException] {
+      AnalyzerMain.migrateTwoScanCheckpoint(spark,
+        ckpt("""{"logOffset":0}""", """{"logOffset":1}"""))
+    }
+    assert(e.getMessage.contains("2 source offsets"), e.getMessage)
+    // a query that never started has no offset log
+    AnalyzerMain.migrateTwoScanCheckpoint(spark,
+      java.nio.file.Files.createTempDirectory("ckpt-fresh").toString)
+  }
+
+  test("lost lineage-cut blocks fail the batch; a restart replays it with exactly-once effect") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+    val stream = MemoryStream[KafkaRecord]
+    val unified = StreamingAnalyzer.unified(stream.toDF())
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-lost").toString
+    val store = scala.collection.concurrent.TrieMap[(String, String), Array[Byte]]()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val loseOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
+    def writer() = StreamingAnalyzer.fanOut(unified, ckpt) { (name, frame) =>
+      frame.collect().foreach { r =>
+        store((name, r.getAs[String]("dedup_id"))) = r.getAs[Array[Byte]]("value")
+      }
+      // the executor holding the batch's blocks is lost after the first write
+      if (name == "all" && loseOnce.getAndSet(false))
+        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!persistedBefore(id)) rdd.unpersist(blocking = true)
+        }
+    }
+    val q1 = writer().queryName("lost_blocks_topo").start()
+    stream.addData(
+      record(0, 1000, "k0", Fixtures.StackTrace),
+      record(1, 2000, "k1", Fixtures.StackTrace),
+      record(2, 3000, "bad", null))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q1.processAllAvailable()
+    }
+    q1.stop()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")),
+      e.toString)
+    assert(store.keys.forall(_._1 == "all"), store.keys.toString)
+
+    val q2 = writer().queryName("lost_blocks_resumed").start()
+    try q2.processAllAvailable() finally q2.stop()
+    val bySink = store.keys.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
+    assert(bySink("all").size == 2, bySink.toString)
+    // the replay re-ran the state update from the batch-start state
+    assert(bySink("stats").map(_.split(':').last) == Seq("1", "2"), bySink.toString)
+    assert(bySink("examples").size == 1 && bySink("errors").size == 1, bySink.toString)
   }
 
   test("sink-commit markers make batch replay idempotent (and prune old markers)") {
@@ -1291,4 +1537,10 @@ class StreamingSpec extends SparkSpec {
     assert(store("https://blog.srca-site.co.uk/tos") == ((14L, 39L)),
       store.toString)
   }
+}
+
+object StreamingSpec {
+  /** Aggregate-hook calls, counted in the executor's JVM (local mode): a
+    * static counter, not a closure capture, which tasks would copy. */
+  val aggRecords = new java.util.concurrent.atomic.AtomicLong
 }

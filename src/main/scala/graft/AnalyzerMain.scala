@@ -83,16 +83,22 @@ object AnalyzerMain {
       "[--schema-registry-url URL] [--timestamp-zone host|ZONE_ID] " +
       "[--state-store rocksdb|hdfs]"
 
+  private val Flags = Set("brokers", "input-pattern", "output-topic",
+    "error-topic", "extra-output-topics", "checkpoint-dir", "avro-schema-files",
+    "schema-registry-url", "timestamp-zone", "state-store")
+
   def parseArgs(args: Array[String]): Config = {
-    // strict pairwise parse: every token must be a --flag followed by its
-    // value — a lone or mispositioned flag fails loudly with usage instead
-    // of silently shifting the pairing
+    // strict pairwise parse: every token must be a known --flag followed by
+    // its value — a lone, mispositioned or mistyped flag fails loudly with
+    // usage instead of silently shifting the pairing or being ignored
     val kv = scala.collection.mutable.Map[String, String]()
     var i = 0
     while (i < args.length) {
       val k = args(i)
       if (!k.startsWith("--") || i + 1 >= args.length)
         throw new IllegalArgumentException(s"unexpected argument '$k'\n$Usage")
+      if (!Flags.contains(k.drop(2)))
+        throw new IllegalArgumentException(s"unknown flag '$k'\n$Usage")
       kv(k.drop(2)) = args(i + 1)
       i += 2
     }
@@ -102,9 +108,10 @@ object AnalyzerMain {
     val extra = kv.get("extra-output-topics")
       .map(_.split(",").map { e =>
         e.split("=", 2) match {
-          case Array(label, topic) => label -> topic
+          case Array(label @ ("stats" | "examples"), topic) => label -> topic
           case _ => throw new IllegalArgumentException(
-            s"malformed --extra-output-topics entry '$e' (want label=topic)\n$Usage")
+            s"malformed --extra-output-topics entry '$e' " +
+              s"(want stats=topic or examples=topic)\n$Usage")
         }
       }.toMap)
       .getOrElse(Map.empty)

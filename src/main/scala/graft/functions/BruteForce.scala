@@ -44,16 +44,14 @@ import org.apache.spark.sql.types._
   *    (`Formatter.java:60-62`, `ZoneId.systemDefault()`), so zone parity is
   *    `Some(ZoneId.systemDefault().getId)`. Default None = session zone
   *    (pinned UTC in this project): deterministic across hosts.
-  *  - `timestampOptionalParts`: render `…THH:mm` when seconds+millis are
-  *    zero and `…THH:mm:ss` when only millis are zero (the short forms of
-  *    `LocalDateTime.toString`, which the reference's DATE_TIME_FORMATTER
-  *    *parses*; its `format()` output is always fixed-width — Java optional
-  *    sections shorten parsing, not formatting — so fixed-width stays the
-  *    default). */
+  *
+  * Sink timestamps are always fixed-width `yyyy-MM-dd'T'HH:mm:ss.SSS`: the
+  * reference's DATE_TIME_FORMATTER has optional sections, but Java optional
+  * sections shorten parsing, not formatting, so its `format()` output never
+  * takes the `…THH:mm` / `…THH:mm:ss` short forms. */
 final case class DecodeConfig(
     schemas: SchemaProvider = StaticSchemas(Map.empty),
-    timestampZone: Option[String] = None,
-    timestampOptionalParts: Boolean = false)
+    timestampZone: Option[String] = None)
 
 object DecodeConfig {
   implicit val default: DecodeConfig = DecodeConfig()

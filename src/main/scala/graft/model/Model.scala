@@ -1,57 +1,14 @@
 package graft.model
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.types._
 
 /**
  * Data model for the dead-letter analytics engine: a Spark-native re-expression
  * of the reference's Avro schema catalog (reference: the .avsc files under
- * `src/main/avro/`, surveyed in /root/repo/SURVEY.md §1.3).
- *
- * Case classes are used at the typed boundaries (the stateful streaming
- * aggregation, tests); the hot path stays in `DataFrame` + column expressions
- * so whole-stage codegen applies.
+ * `src/main/avro/`, surveyed in SURVEY.md §1.3). The records are
+ * Spark schemas; the hot path stays in `DataFrame` + column expressions so
+ * whole-stage codegen applies.
  */
-
-/** `ErrorDescription` (external error-handling-avro; reference
-  * StreamsDeadLetterParser.java:74-78). All fields nullable. */
-final case class ErrorDescription(
-    error_class: Option[String],
-    message: Option[String],
-    stack_trace: Option[String])
-
-/** `DeadLetter` (external error-handling-avro; field census at reference
-  * StreamsDeadLetterParser.java:79-88, ConnectDeadLetterParser.java:79-89). */
-final case class DeadLetter(
-    input_value: Option[String],
-    partition: Option[Int],
-    topic: Option[String],
-    offset: Option[Long],
-    description: String,
-    cause: ErrorDescription,
-    input_timestamp: Option[Timestamp])
-
-/** Kafka consumer context of the dead-letter record itself (reference
-  * `src/main/avro/Context.avsc:6-30`). */
-final case class Context(key: String, offset: Long, partition: Int, timestamp: Timestamp)
-
-/** reference `src/main/avro/DeadLetterWithContext.avsc:6-17`. */
-final case class DeadLetterWithContext(context: Context, dead_letter: DeadLetter)
-
-/** Grouping key of the running statistics (reference `src/main/avro/ErrorKey.avsc:6-17`).
-  * `errorType` maps to the Avro field `type` (reserved word in Scala). */
-final case class ErrorKey(topic: String, errorType: String)
-
-/** Running per-(topic, type) statistics (reference `src/main/avro/ErrorStatistics.avsc:6-28`). */
-final case class ErrorStatistics(count: Int, created: Timestamp, updated: Timestamp)
-
-/** Per-record output of the stateful aggregation (reference `Result.java:33-51`):
-  * `example` is set only when the key was previously unseen. */
-final case class AggResult(
-    key: ErrorKey,
-    statistics: ErrorStatistics,
-    example: Option[DeadLetterWithContext])
 
 object Schemas {
   /** Kafka record envelope, identical to the columns of Spark's Kafka source with

@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * Lifecycle registry for operator-internal `persist()`s.
+ * Lifecycle registry for operator-internal `persist()`s and lineage cuts.
  *
  * Operators like [[Dedup.minhashLsh]] persist a small intermediate (the
  * signature table) that is referenced from several join branches of the frame
@@ -16,6 +16,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * invocations in one session don't accumulate cached blocks until eviction
  * pressure (judge r2 finding: un-unpersisted persists are a leak in a real
  * service).
+ *
+ * Four flavors, picked per call site: [[track]] (lazy persist),
+ * [[trackEager]] (persist + count, so size gates read the actual size),
+ * [[barrier]] and [[barrierLazy]] (lineage cut, eager or fused into the
+ * caller's next action). Every lineage cut is a `localCheckpoint`: its
+ * blocks live on the executors, so losing an executor fails the query that
+ * reads the cut. Durability is the caller's; the streaming analyzer's comes
+ * from the query's own checkpointed offsets and state plus replay.
  *
  * Concurrency contract: release scope is the SESSION, not the request — a
  * service interleaving requests on one shared session must serialize
@@ -88,35 +96,18 @@ object CacheScope {
     * judge r8 #2). The barrier makes downstream analysis O(downstream).
     *
     * Trade-off, stated: lineage truncation forfeits recompute-on-executor-
-    * loss for these blocks — on a cluster a long pipeline would checkpoint
-    * to durable storage or write the stage as a table (same plan shape);
-    * block footprint equals the persist the barrier replaces. Blocks are
+    * loss for these blocks — a pipeline that must survive it writes the
+    * stage as a table (same plan shape); block footprint equals the
+    * persist the barrier replaces. Blocks are
     * released by [[releaseAll]] like every tracked persist. */
   def barrier(df: DataFrame): DataFrame = checkpointed(df, eager = true)
 
-  /** Conf key selecting the DURABLE barrier flavor: when `true` AND the
-    * SparkContext has a checkpoint directory set, [[barrier]]/[[barrierLazy]]
-    * cut lineage with a RELIABLE `checkpoint()` (blocks written to the
-    * checkpoint dir — replicated storage on a cluster) instead of
-    * `localCheckpoint()` (unreplicated executor blocks, recompute-on-loss
-    * forfeited — the scaladoc trade-off). Default OFF: on `local[*]` the
-    * two are equivalent in durability and the local flavor skips the file
-    * write; a cluster deployment sets this plus `sc.setCheckpointDir` and
-    * every operator barrier in the repo becomes executor-loss-safe with no
-    * code change. [[releaseAll]] deletes the checkpoint files. */
-  val ReliableBarrierConf = "spark.graft.barrier.reliable"
-
-  /** Cut `df`'s lineage and register the checkpoint RDD for [[releaseAll]].
-    * The reliable flavor is always eager: a lazy reliable checkpoint runs a
-    * second job after the caller's first action that recomputes the whole
-    * lineage to write the files, while the eager write is one job with one
-    * compute, and later reads come from the files. */
+  /** Cut `df`'s lineage (`localCheckpoint`) and register the checkpoint
+    * RDD for [[releaseAll]]. */
   private def checkpointed(df: DataFrame, eager: Boolean): DataFrame = {
     evictStopped()
     val s = df.sparkSession
-    val reliable = s.conf.get(ReliableBarrierConf, "false").toBoolean &&
-      s.sparkContext.getCheckpointDir.isDefined
-    val cp = if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager)
+    val cp = df.localCheckpoint(eager)
     org.apache.spark.sql.graftbridge.checkpointRdd(cp).foreach { r =>
       trackedRdds
         .computeIfAbsent(s, _ => new ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
@@ -138,15 +129,14 @@ object CacheScope {
     * train whose scheduling cost grows with core count (r16 judge item 1:
     * 32-core bench SLOWER than 8-core on the hop queries). Caller
     * contract: run a full-coverage action before deriving anything else,
-    * or the first derived action pays the materialization instead. The
-    * reliable flavor ([[ReliableBarrierConf]]) materializes here, eagerly. */
+    * or the first derived action pays the materialization instead. */
   def barrierLazy(df: DataFrame): DataFrame = checkpointed(df, eager = false)
 
-  /** Unpersist every tracked intermediate of `spark` (non-blocking) and
-    * delete the files of its reliable barrier checkpoints. The
-    * queue is drained in place rather than removed from the registry, so a
-    * concurrent [[track]] can never register into an orphaned queue (it
-    * lands in the live one and is released by this or the next drain).
+  /** Unpersist every tracked intermediate and barrier checkpoint of
+    * `spark` (non-blocking). The queue is drained in place rather than
+    * removed from the registry, so a concurrent [[track]] can never register
+    * into an orphaned queue (it lands in the live one and is released by
+    * this or the next drain).
     * Release scope is the SESSION: callers interleaving queries on one
     * session release between queries, not mid-flight. Long-lived harness
     * caches (the parsed/envelope frames in SparkEntry/DeadLetterSource) are
@@ -166,10 +156,6 @@ object CacheScope {
       var r = rq.poll()
       while (r != null) {
         r.unpersist(blocking = false)
-        r.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        }
         r = rq.poll()
       }
     }

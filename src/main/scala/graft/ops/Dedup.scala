@@ -497,11 +497,10 @@ object Dedup {
     * shrink the joins but can stretch a clique into a deep tree and blow up
     * the round count).
     *
-    * @param checkpointDir when set, per-round lineage truncation uses
-    *   reliable `checkpoint()` into this directory (HDFS/S3 on a cluster) so
-    *   a lost executor replays from storage instead of failing the job;
-    *   default is executor-local `localCheckpoint()` — faster, not
-    *   fault-tolerant.
+    * Every lineage cut here (pair table, edges, each round's labels) is an
+    * executor-local `localCheckpoint()`: a lost executor fails the job
+    * rather than replaying a round from storage.
+    *
     * @param localEdgeGate max SPANNING-FOREST edge count solved driver-side
     *   (default 1M edges ≈ tens of MB of ids on the driver — the
     *   broadcast-join size class); the forest is near-linear in
@@ -519,7 +518,6 @@ object Dedup {
     *   subgraph semi-joins are skipped — at corpus scale that removes two
     *   passes over the (large) pair stream that would filter nothing. */
   def clusters(docs: DataFrame, pairs: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None,
       localEdgeGate: Long = 1000000L,
       pairsInduced: Boolean = false): DataFrame = {
     // Iterative algorithm: every round MUST truncate lineage (eager
@@ -532,9 +530,6 @@ object Dedup {
     // parallelism, so every round reshuffles only the one-row-per-doc label
     // table, never the 2|pairs| edge table
     val sc = docs.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     // Restrict edges to the docs-induced subgraph BEFORE materializing:
     // an edge with an endpoint absent from `docs` is ignored (it cannot
     // carry a label in the propagation loop, and filtering here makes the
@@ -550,7 +545,7 @@ object Dedup {
         .join(Par.maybeBroadcast(ids.withColumnRenamed("doc_id", "b")),
           Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-    val p = truncate(induced)
+    val p = induced.localCheckpoint()
     // p is materialized, so the counts and the forest pass below scan cached
     // blocks, never the pair-generation subtree. Gate staging (advisor r4 —
     // don't pay the contraction scan on inputs it cannot help):
@@ -571,13 +566,15 @@ object Dedup {
       .select(explode(array(col("a"), col("b"))).as("v"))
       .agg(approx_count_distinct(col("v")).as("n")).head().getLong(0)
     if (touchedEst <= localEdgeGate * 2) {
-      val forest = truncate(spanningForest(p))
+      val forest = spanningForest(p).localCheckpoint()
       if (forest.count() <= localEdgeGate) return clustersLocal(docs, forest)
     }
-    val edges = truncate(p
+    val edges = p
       .unionByName(p.select(col("b").as("a"), col("a").as("b")))
-      .repartition(sc.defaultParallelism, col("b")))
-    var labels = truncate(docs.select(col("doc_id"), col("doc_id").as("label")))
+      .repartition(sc.defaultParallelism, col("b"))
+      .localCheckpoint()
+    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
+      .localCheckpoint()
     // Rides the checkpoint job; only zero-vs-nonzero is read, so task
     // retries inflating the count are harmless (a retry can only re-count a
     // genuinely changed row — an unchanged fixpoint always reads 0).
@@ -611,7 +608,7 @@ object Dedup {
       // and the larger composed plan re-pays codegen — measured net slower.
       changedAcc.reset()
       val t0 = System.nanoTime()
-      labels = truncate(hop(labels)).drop("changed")
+      labels = hop(labels).localCheckpoint().drop("changed")
       converged = changedAcc.value == 0L
       it += 1
       if (sys.env.contains("GRAFT_CLUSTERS_DEBUG"))
@@ -644,8 +641,7 @@ object Dedup {
     * `cluster_id` = min doc_id of the merged component. */
   def dedupPipeline(docs: DataFrame, threshold: Double = 0.8,
       tokenizer: Tokenizer = Tokenizer.Whitespace,
-      localEdgeGate: Long = 5000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      localEdgeGate: Long = 5000000L): DataFrame = {
     // The gate default is higher than clusters()' own: a rep pair graph is
     // dense (near-dup cliques), and the gate is applied AFTER the spanning-
     // forest contraction, whose output is near-linear in touched vertices —
@@ -667,7 +663,7 @@ object Dedup {
     // pairsInduced: the pairs come from minhashLsh over reps itself, so the
     // induced-subgraph semi-joins would filter nothing — skipped
     val repClusters = clusters(reps, pairs, localEdgeGate = localEdgeGate,
-        checkpointDir = checkpointDir, pairsInduced = true)
+        pairsInduced = true)
       .select(col("doc_id").as("rep_id"), col("cluster_id"))
     withRep.join(repClusters, "rep_id")
       .select(col("doc_id"), col("cluster_id"),

@@ -26,22 +26,13 @@ object Analyzer {
   final case class Outputs(
       all: DataFrame, stats: DataFrame, examples: DataFrame, errors: DataFrame)
 
-  /** Sink timestamp rendering (reference Formatter.java:42-64), configurable
-    * via [[DecodeConfig]]: default is fixed-width `yyyy-MM-dd'T'HH:mm:ss.SSS`
-    * in the session zone (pinned UTC — deterministic across hosts);
-    * `timestampZone` renders the reference's host-zone wall clock;
-    * `timestampOptionalParts` enables the `…THH:mm` / `…THH:mm:ss` short
-    * forms when the sub-minute parts are zero. */
+  /** Sink timestamp rendering (reference Formatter.java:42-64): fixed-width
+    * `yyyy-MM-dd'T'HH:mm:ss.SSS`, in the session zone (pinned UTC —
+    * deterministic across hosts) unless [[DecodeConfig]]'s `timestampZone`
+    * selects the reference's host-zone wall clock. */
   def formatTimestamp(ts: Column)(implicit dc: DecodeConfig): Column = {
     val z = dc.timestampZone.map(zone => from_utc_timestamp(ts, zone)).getOrElse(ts)
-    val full = date_format(z, "yyyy-MM-dd'T'HH:mm:ss.SSS")
-    if (!dc.timestampOptionalParts) full
-    else
-      when(date_format(z, "ss.SSS") === "00.000",
-          date_format(z, "yyyy-MM-dd'T'HH:mm"))
-        .when(date_format(z, "SSS") === "000",
-          date_format(z, "yyyy-MM-dd'T'HH:mm:ss"))
-        .otherwise(full)
+    date_format(z, "yyyy-MM-dd'T'HH:mm:ss.SSS")
   }
 
   /** Elastic document id `{topic}+{partition}+{offset}` (reference

@@ -80,18 +80,9 @@ object StreamingAnalyzer {
     * third error channel: the record surfaces as a dead letter with
     * description "Error aggregating dead letters", state is left as it was,
     * and the stream continues. */
-  def aggregateWith(onRecord: Enriched => Unit,
-      stateTtlMs: Option[Long] = None)(
+  def aggregateWith(onRecord: Enriched => Unit)(
       key: (String, String), rows: Iterator[Enriched],
       state: GroupState[StatsState]): Iterator[StatResult] = {
-    // Optional state TTL — a scale extension OFF by default: reference state
-    // never expires (SURVEY §2.4/§4; key cardinality is topics × error
-    // types, so parity mode is safe). With a TTL, an idle key's stats are
-    // dropped and its next record starts a fresh count/example epoch.
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
     val ordered = rows.toIndexedSeq.sortBy(r => (r.timestampUs, r.offset))
     ordered.iterator.map { r =>
       try {
@@ -103,7 +94,6 @@ object StreamingAnalyzer {
           case None => StatsState(1, r.timestampUs, r.timestampUs)
         }
         state.update(next)
-        stateTtlMs.foreach(state.setTimeoutDuration)
         val first = prior.isEmpty
         StatResult(key._1, key._2, next.count, next.createdUs, next.updatedUs,
           if (first) Some(r.key) else None,
@@ -122,11 +112,6 @@ object StreamingAnalyzer {
     }
   }
 
-  /** Production aggregate: the plain processor body. */
-  def aggregate(key: (String, String), rows: Iterator[Enriched],
-      state: GroupState[StatsState]): Iterator[StatResult] =
-    aggregateWith(_ => ())(key, rows, state)
-
   /** The streaming outputs: `all` is a stateless projection of the shared
     * column pipeline; `results` is the per-record update stream carrying
     * stats and (on first occurrence) the example; `errors` unions all THREE
@@ -135,8 +120,7 @@ object StreamingAnalyzer {
   final case class StreamingOutputs(all: DataFrame, results: DataFrame, errors: DataFrame)
 
   def analyze(input: DataFrame,
-      onAggRecord: Enriched => Unit = _ => (),
-      stateTtlMs: Option[Long] = None)(
+      onAggRecord: Enriched => Unit = _ => ())(
       implicit dc: graft.functions.DecodeConfig): StreamingOutputs = {
     val p = Analyzer.parsed(input)
     val parseErrors = p.filter(col("parsed").getField("error").isNotNull)
@@ -159,8 +143,8 @@ object StreamingAnalyzer {
       .select(stats.fields :+ stats.key1.as("_1") :+ stats.key2.as("_2"): _*)
       .groupBy(col("_1"), col("_2"))
       .as[(String, String), Enriched](StateKey, Encoders.product[Enriched])
-      .flatMapGroupsWithState(OutputMode.Append, timeoutOf(stateTtlMs))(
-        aggregateWith(onAggRecord, stateTtlMs))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        aggregateWith(onAggRecord))(
         Encoders.product[StatsState], Encoders.product[StatResult])
       .toDF()
 
@@ -190,10 +174,6 @@ object StreamingAnalyzer {
 
   private val StateKey = Encoders.tuple(Encoders.STRING, Encoders.STRING)
 
-  private def timeoutOf(stateTtlMs: Option[Long]): GroupStateTimeout =
-    if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
-
   /** Fan-out order of the four sinks. */
   val SinkNames: Seq[String] = Seq("all", "stats", "examples", "errors")
 
@@ -217,8 +197,7 @@ object StreamingAnalyzer {
     * [[aggregateWith]] then runs over them in `(timestamp, offset)` order.
     * A pass-only group (parse and analyze errors) carries no narrow fields,
     * so it emits its rows and never touches state. */
-  def passAndAggregate(onRecord: Enriched => Unit,
-      stateTtlMs: Option[Long] = None)(
+  def passAndAggregate(onRecord: Enriched => Unit)(
       key: (String, String), rows: Iterator[Carried],
       state: GroupState[StatsState]): Iterator[Emitted] = {
     val narrow = scala.collection.mutable.ArrayBuffer.empty[Enriched]
@@ -228,7 +207,7 @@ object StreamingAnalyzer {
     }
     // `++` takes its argument by name: the aggregate runs once the carried
     // rows are drained
-    passed ++ aggregateWith(onRecord, stateTtlMs)(key, narrow.iterator, state)
+    passed ++ aggregateWith(onRecord)(key, narrow.iterator, state)
       .map(r => Emitted(None, Some(r)))
   }
 
@@ -265,8 +244,7 @@ object StreamingAnalyzer {
     * under 1 %). When one key dominates — a flood from one failing service
     * with one error type — one task deserializes, re-serializes and writes
     * nearly the whole batch's payload. */
-  def unified(input: DataFrame, onAggRecord: Enriched => Unit = _ => (),
-      stateTtlMs: Option[Long] = None)(
+  def unified(input: DataFrame, onAggRecord: Enriched => Unit = _ => ())(
       implicit dc: graft.functions.DecodeConfig): DataFrame = {
     val err = col("parsed").getField("error")
     val dl = col("parsed").getField("dead_letter")
@@ -313,8 +291,8 @@ object StreamingAnalyzer {
     val emitted = carried
       .groupBy(col("_1"), col("_2"))
       .as[(String, String), Carried](StateKey, Encoders.product[Carried])
-      .flatMapGroupsWithState(OutputMode.Append, timeoutOf(stateTtlMs))(
-        passAndAggregate(onAggRecord, stateTtlMs))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        passAndAggregate(onAggRecord))(
         Encoders.product[StatsState], Encoders.product[Emitted])
       .toDF()
       .select(col("row"), col("result.*"))

@@ -13,12 +13,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * distinct key in the checkpointed state store. State is partitioned by
   * the key hash, so it scales horizontally like any keyed stream.
   *
-  * State growth is the 100 TB concern: unbounded distinct keys mean
-  * unbounded state. `stateTtlMs` bounds it with a processing-time TTL —
-  * after expiry a recurring duplicate is re-admitted (the standard
-  * dedup-window trade, same contract as `dropDuplicates` with a watermark;
-  * exact-forever dedup needs the batch operator over the accumulated
-  * corpus).
+  * State is bounded only by the number of distinct keys: an entry never
+  * expires, so a key is suppressed forever and state grows with every new
+  * key. An unbounded key space needs a state store sized for it (the
+  * RocksDB provider spills to local disk) or the batch operator over the
+  * accumulated corpus.
   *
   * Works on batch frames too (Spark runs `flatMapGroupsWithState` with
   * batch semantics: per-group state starts empty), where it degenerates to
@@ -77,7 +76,6 @@ object StreamingDedup {
   }
 
   def firstSeen(df: DataFrame, keyExpr: org.apache.spark.sql.Column,
-      stateTtlMs: Option[Long] = None,
       orderBy: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val withKey = orderBy.foldLeft(
       df.withColumn("__dedup_key", keyExpr.cast("string"))) {
@@ -87,24 +85,13 @@ object StreamingDedup {
     val keyIdx = withKey.schema.fieldIndex("__dedup_key")
     val ordIdx = if (orderBy.isDefined)
       withKey.schema.fieldIndex("__dedup_ord") else -1
-    val timeout =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val deduped = withKey.as(rowEnc)
       .groupByKey(r => r.getString(keyIdx))(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[Row], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            // TTL expiry delivers an empty batch for the group; drop the
-            // entry so a later recurrence is re-admitted as first-seen
-            state.remove()
-            Iterator.empty
-          } else if (state.exists || !rows.hasNext) {
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            Iterator.empty
-          } else {
+          if (state.exists || !rows.hasNext) Iterator.empty
+          else {
             state.update(System.currentTimeMillis())
-            stateTtlMs.foreach(state.setTimeoutDuration)
             // a single micro-batch can itself carry duplicates: the
             // orderBy-minimal row wins (or the first encountered, if no
             // order was given) — O(1) memory either way

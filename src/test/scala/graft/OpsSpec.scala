@@ -588,25 +588,6 @@ class OpsSpec extends SparkSpec {
     graft.ops.CacheScope.releaseAll(spark)
   }
 
-  test("cluster resolution: reliable-checkpoint path matches localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val d = (0L until 40L).map(i => (i, s"t$i")).toDF("doc_id", "text")
-    // chain 0-1-2-...-9 plus singletons; gate forced to 0 so the distributed
-    // loop runs and exercises checkpoint() into the directory
-    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
-    val viaReliable = Dedup.clusters(d, pairs, checkpointDir = Some(dir),
-        localEdgeGate = 0L).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
-    val viaLocal = Dedup.clusters(d, pairs, localEdgeGate = 0L).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
-    assert(viaReliable == viaLocal)
-    assert((0L to 9L).forall(viaReliable(_) == 0L))
-    // checkpoints were actually WRITTEN there (the dir existing proves
-    // nothing — this test created it)
-    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0)
-    graft.ops.CacheScope.releaseAll(spark)
-  }
-
   test("cluster resolution: string ids through the local finish") {
     val d = Seq("x", "y", "z").map(s => (s, s)).toDF("doc_id", "text")
     val pairs = Seq(("y", "z")).toDF("a", "b")
@@ -4310,49 +4291,37 @@ class OpsSpec extends SparkSpec {
     graft.ops.CacheScope.releaseAll(spark)
   }
 
-  test("reliable barrier flavor: durable checkpoint files, same rows, leaf plan") {
+  test("barrier flavors: leaf plan, one evaluation per row, released blocks") {
     import graft.ops.CacheScope
     val spark2 = spark; import spark2.implicits._
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
       .filter(col("id") > 1)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-relbar")
     val expected = df.collect().toSet
-    def files(f: java.io.File): Seq[java.io.File] = {
-      val k = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
-      k.filter(_.isFile) ++ k.filter(_.isDirectory).flatMap(files)
-    }
+    def rddId(d: org.apache.spark.sql.DataFrame): Int =
+      org.apache.spark.sql.graftbridge.checkpointRdd(d).get.id
     try {
-      spark.sparkContext.setCheckpointDir(ckDir.toString)
-      spark.conf.set(CacheScope.ReliableBarrierConf, "true")
       val b = CacheScope.barrier(df)
       assert(b.collect().toSet == expected)
       // lineage is cut: the analyzed plan is a leaf over the checkpoint RDD
       assert(org.apache.spark.sql.graftbridge.checkpointRdd(b).isDefined)
-      // durable: block files landed under the checkpoint dir
-      assert(files(ckDir.toFile).nonEmpty, "no checkpoint files written")
       // the lazy flavor materializes on the caller's first full action
       val bl = CacheScope.barrierLazy(df)
       assert(bl.count() == 2 && bl.collect().toSet == expected)
-      // ... and computes the lineage once: the checkpoint write must not
-      // re-run it after the caller's first action
-      val evals = spark.sparkContext.longAccumulator("relbar-evals")
+      // ... and computes the lineage once: later actions read the blocks
+      val evals = spark.sparkContext.longAccumulator("barrier-evals")
       val counted = udf { (id: Long) => evals.add(1); id }.asNondeterministic()
       val rows = CacheScope.barrierLazy(
         spark.range(0, 1000, 1, 4).select(counted(col("id")).as("id")))
       assert(rows.agg(sum("id")).head().getLong(0) == 499500L)
       assert(rows.count() == 1000L)
       assert(evals.value == 1000L, s"${evals.value} evaluations for 1000 rows")
-      // release deletes the checkpoint files, not just the blocks
+      // release frees the cut's blocks
+      val ids = Seq(b, bl, rows).map(rddId)
+      assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains))
       CacheScope.releaseAll(spark)
-      assert(files(ckDir.toFile).isEmpty, "checkpoint files left after releaseAll")
-    } finally {
-      spark.conf.unset(CacheScope.ReliableBarrierConf)
-      CacheScope.releaseAll(spark)
-      org.apache.spark.GraftTestAccess.clearCheckpointDir(spark.sparkContext)
-      org.apache.commons.io.FileUtils.deleteDirectory(ckDir.toFile)
-    }
-    // the shared context no longer points at the deleted dir
-    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains),
+        "checkpoint RDDs still persisted after releaseAll")
+    } finally CacheScope.releaseAll(spark)
   }
 
   test("bucketed layout detected structurally when the marker file is absent") {

@@ -192,10 +192,14 @@ class StreamingSpec extends SparkSpec {
       assert(plan.collectLeaves().count(_.isInstanceOf[
         org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec]) == 1,
         plan.toString)
-      assert(plan.collect {
+      val stateful = plan.collect {
         case s: org.apache.spark.sql.execution.streaming.operators.stateful
             .flatmapgroupswithstate.FlatMapGroupsWithStateExec => s
-      }.size == 1, plan.toString)
+      }
+      assert(stateful.size == 1, plan.toString)
+      // reference state never expires: no timeout is ever armed
+      assert(stateful.head.timeoutConf ==
+        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
     } finally q.stop()
   }
 
@@ -402,6 +406,22 @@ class StreamingSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       AnalyzerMain.parseArgs(Array("--brokers", "b"))
     }
+    // a mistyped flag fails instead of falling back to the default
+    val typo = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(Array(
+        "--brokers", "b", "--input-pattern", "p",
+        "--output-topic", "out", "--error-topic", "err",
+        "--checkpoint-directory", "/shared/ckpt"))
+    }
+    assert(typo.getMessage.contains("--checkpoint-directory"), typo.getMessage)
+    // so does a sink label other than stats/examples
+    val label = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(Array(
+        "--brokers", "b", "--input-pattern", "p",
+        "--output-topic", "out", "--error-topic", "err",
+        "--extra-output-topics", "stats=s,example=x"))
+    }
+    assert(label.getMessage.contains("example=x"), label.getMessage)
   }
 
   test("stateful analyzer runs green under the RocksDB state store provider") {
@@ -444,37 +464,6 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset(key)
       }
     }
-  }
-
-  test("optional state TTL: timed-out key is dropped and restarts an epoch") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val enriched = StreamingAnalyzer.Enriched(
-      "t", "cls", "k", 0L, 0, 1000L, "d")
-
-    // timed-out invocation: state removed, nothing emitted
-    val timedOut = TestGroupState.create[StreamingAnalyzer.StatsState](
-      org.apache.spark.api.java.Optional.of(StreamingAnalyzer.StatsState(5, 1L, 2L)),
-      GroupStateTimeout.ProcessingTimeTimeout, 1000L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = true)
-    val out = StreamingAnalyzer.aggregateWith(_ => (), Some(60000L))(
-      ("t", "cls"), Iterator.empty, timedOut).toSeq
-    assert(out.isEmpty && timedOut.isRemoved)
-
-    // fresh record after expiry: a NEW epoch — count restarts, example re-emitted
-    val fresh = TestGroupState.create[StreamingAnalyzer.StatsState](
-      org.apache.spark.api.java.Optional.empty[StreamingAnalyzer.StatsState](), GroupStateTimeout.ProcessingTimeTimeout, 1000L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    val out2 = StreamingAnalyzer.aggregateWith(_ => (), Some(60000L))(
-      ("t", "cls"), Iterator(enriched), fresh).toSeq
-    assert(out2.length == 1 && out2.head.count == 1 && out2.head.exampleKey.contains("k"))
-    assert(fresh.getTimeoutTimestampMs.isPresent) // TTL armed
-
-    // parity mode (no TTL): no timeout ever armed
-    val parity = TestGroupState.create[StreamingAnalyzer.StatsState](
-      org.apache.spark.api.java.Optional.empty[StreamingAnalyzer.StatsState](), GroupStateTimeout.NoTimeout, 1000L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    StreamingAnalyzer.aggregate(("t", "cls"), Iterator(enriched), parity).toSeq
-    assert(!parity.getTimeoutTimestampMs.isPresent)
   }
 
   test("streaming error channel emits dead letters for null stack traces") {

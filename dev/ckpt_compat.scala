@@ -8,6 +8,12 @@
 // second run prints 2..4, not 1..2). A fresh CK_BASE run with the new classes
 // gives the state schema to compare with the old one:
 //   cmp old/ck/state/0/0/_metadata/schema new/ck/state/0/0/_metadata/schema
+// Each run also writes the query's last executed micro-batch plan to
+// $CK_BASE/plan.txt, stripped of what differs between runs of one plan:
+// expression ids (`#123`), object identities (lambda names, `@1f2e3d`), the
+// run id, the batch timestamp, input file names and the CK_BASE path. Two
+// fresh CK_FILE=0 runs, old classes and new, must `diff` clean:
+//   diff old/plan.txt new/plan.txt
 //
 //   CK_BASE=<dir> CK_FILE=<n> spark-shell --master local[2] \
 //     --conf spark.ui.enabled=false \
@@ -49,6 +55,16 @@ val q = graft.streaming.StreamingAnalyzer.fanOut(
       frame.select("dedup_id").collect().foreach(r => stats.add(r.getString(0)))
 }.start()
 q.processAllAvailable()
+val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+    .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.treeString
+  .replace(base, "$CK_BASE")
+  .replaceAll("#\\d+L?", "")
+  .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+  .replaceAll("@[0-9a-f]+\\b", "@")
+  .replaceAll("runId = [0-9a-f-]+", "runId = <uuid>")
+  .replaceAll("\\b\\d{13}\\b", "<batch ms>")
+  .replaceAll("src/part-[^,\\]]*", "src/<file>")
+java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/plan.txt"), plan)
 q.stop()
 println("STATS=" + stats.toArray.map(_.toString).sorted.mkString(","))
 sys.exit(0)

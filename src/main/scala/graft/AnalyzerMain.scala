@@ -62,12 +62,13 @@ object AnalyzerMain {
     def decodeConfig: graft.functions.DecodeConfig = {
       val static = graft.functions.StaticSchemas(
         avroSchemaFiles.map { case (id, path) =>
-          val json = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-          try new org.apache.avro.Schema.Parser().parse(json)
-          catch { case e: Exception => throw new IllegalArgumentException(
-            s"--avro-schema-files $id=$path: not a valid Avro schema: ${e.getMessage}") }
-          id -> json
+          try {
+            val json = new String(java.nio.file.Files.readAllBytes(
+              java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+            new org.apache.avro.Schema.Parser().parse(json)
+            id -> json
+          } catch { case e: Exception => throw new IllegalArgumentException(
+            s"--avro-schema-files $id=$path: unreadable or invalid Avro schema: $e\n$Usage") }
         })
       val provider = schemaRegistryUrl
         .map(u => graft.functions.HttpRegistrySchemas(u, fallback = static))
@@ -99,6 +100,8 @@ object AnalyzerMain {
         throw new IllegalArgumentException(s"unexpected argument '$k'\n$Usage")
       if (!Flags.contains(k.drop(2)))
         throw new IllegalArgumentException(s"unknown flag '$k'\n$Usage")
+      if (kv.contains(k.drop(2)))
+        throw new IllegalArgumentException(s"repeated flag '$k'\n$Usage")
       kv(k.drop(2)) = args(i + 1)
       i += 2
     }
@@ -108,7 +111,8 @@ object AnalyzerMain {
     val extra = kv.get("extra-output-topics")
       .map(_.split(",").map { e =>
         e.split("=", 2) match {
-          case Array(label @ ("stats" | "examples"), topic) => label -> topic
+          case Array(label @ ("stats" | "examples"), topic) if topic.nonEmpty =>
+            label -> topic
           case _ => throw new IllegalArgumentException(
             s"malformed --extra-output-topics entry '$e' " +
               s"(want stats=topic or examples=topic)\n$Usage")
@@ -129,7 +133,10 @@ object AnalyzerMain {
     // Default (absent) keeps the engine's deterministic session-UTC rendering.
     val tsZone = kv.get("timestamp-zone").map {
       case "host" => java.time.ZoneId.systemDefault().getId
-      case z => java.time.ZoneId.of(z).getId // validates, fails fast
+      case z =>
+        try java.time.ZoneId.of(z).getId
+        catch { case e: java.time.DateTimeException => throw new IllegalArgumentException(
+          s"unknown --timestamp-zone '$z': ${e.getMessage}\n$Usage") }
     }
     // state-store backend: RocksDB by default — the statistics state is keyed
     // by (topic, type) but at 100 TB-scale topic cardinality (plus the

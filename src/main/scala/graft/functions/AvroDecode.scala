@@ -51,8 +51,3 @@ final case class AvroDecode(schemas: SchemaProvider) extends Serializable {
     }
   }
 }
-
-object AvroDecode {
-  /** Decoder over a static id→schema map. */
-  def apply(byId: Map[Int, String]): AvroDecode = AvroDecode(StaticSchemas(byId))
-}

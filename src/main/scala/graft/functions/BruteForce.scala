@@ -55,10 +55,6 @@ final case class DecodeConfig(
 
 object DecodeConfig {
   implicit val default: DecodeConfig = DecodeConfig()
-
-  /** Convenience: a config over a static id→schema map. */
-  def apply(byId: Map[Int, String]): DecodeConfig =
-    DecodeConfig(StaticSchemas(byId))
 }
 
 object BruteForce {
@@ -105,10 +101,6 @@ object BruteForce {
     * carries an active [[SchemaProvider]] (default: none). */
   def decoded(bin: Column)(implicit dc: DecodeConfig): Column =
     decodedWithAvro(bin, dc.schemas)
-
-  /** [[decoded]] over a static id→schema map (test/fixture convenience). */
-  def decodedWithAvro(bin: Column, schemasById: Map[Int, String]): Column =
-    decodedWithAvro(bin, StaticSchemas(schemasById))
 
   /** [[decoded]] with a Confluent-wire-format Avro tier tried first (chain
     * step 2), resolving schema ids through `provider` — the reference's

@@ -110,16 +110,10 @@ object Analyzer {
     val analyzeErrors = ok.filter(col("enrich_error").isNotNull)
     val good = ok.filter(col("enrich_error").isNull)
 
-    // Sink "all": one enriched record per dead letter (FullDeadLetterWithContext.avsc)
+    // Sink "all": one enriched record per dead letter
     val all = good.select(
-      elasticId(col("topic"), col("partition"), col("offset")).as("key"),
-      col("key_string").as("context_key"),
-      col("offset"),
-      col("partition"),
-      formatTimestamp(col("timestamp")).as("timestamp"),
-      col("dead_letter"),
-      col("topic"),
-      col("error_type").as("type"))
+      elasticId(col("topic"), col("partition"), col("offset")).as("key") +:
+        allRecord(col("key_string"), col("dead_letter"), col("error_type")): _*)
 
     // Sinks "stats" + "examples": one aggregation, two projections — mirrors the
     // reference sharing one stateful result between both sinks
@@ -142,12 +136,9 @@ object Analyzer {
         format_string("%020d:%s", col("offset"), col("branch"))).as("example"))
 
     val stats = aggregated.select(
-      errorKeyString(col("topic"), col("type")).as("key"),
-      col("count"),
-      formatTimestamp(col("created")).as("created"),
-      formatTimestamp(col("updated")).as("updated"),
-      col("topic"),
-      col("type"))
+      errorKeyString(col("topic"), col("type")).as("key") +:
+        statsRecord(col("count"), col("created"), col("updated"), col("topic"),
+          col("type")): _*)
 
     val examples = aggregated.select(
       errorKeyString(col("topic"), col("type")).as("key"),
@@ -155,15 +146,39 @@ object Analyzer {
       col("topic"),
       col("type"))
 
-    Outputs(all, stats, examples, errorsOf(parseErrors, analyzeErrors))
+    // Error sink (T11): both capture sites as dead letters with the
+    // reference's fixed descriptions; key = stringified input key (S5)
+    val errors = parseErrors.select(
+        coalesce(BruteForce.stringified(col("key")), lit("null")).as("key"),
+        parseErrorDl(col("parsed").getField("error"), col("value"), col("timestamp"))
+          .as("dead_letter"))
+      .unionByName(analyzeErrors.select(col("key_string").as("key"),
+        analyzeErrorDl(col("enrich_error"), col("dead_letter"), col("timestamp"))
+          .as("dead_letter")))
+
+    Outputs(all, stats, examples, errors)
   }
 
-  /** Error channel (T11): both capture sites converted to dead letters with the
-    * reference's fixed descriptions; key = stringified input key (S5). Shared
-    * by the batch and streaming topologies. */
-  def errorsOf(parseErrors: DataFrame, analyzeErrors: DataFrame)(implicit dc: DecodeConfig): DataFrame =
-    parseErrorDeadLetters(parseErrors)
-      .unionByName(analyzeErrorDeadLetters(analyzeErrors))
+  /** The fields of the S2 `all` record (reference
+    * `FullDeadLetterWithContext.avsc`), over a classified record's rendered
+    * key, dead letter and error type and its envelope columns — ONE
+    * definition for the batch `all` frame and the streaming `all` value. */
+  def allRecord(keyString: Column, deadLetter: Column, errorType: Column)(
+      implicit dc: DecodeConfig): Seq[Column] = Seq(
+    keyString.as("context_key"), col("offset"), col("partition"),
+    formatTimestamp(col("timestamp")).as("timestamp"),
+    deadLetter.as("dead_letter"), col("topic"), errorType.as("type"))
+
+  /** The fields of the S3 `stats` record — ONE definition for the batch
+    * `stats` frame and the streaming stats value. Their order is the field
+    * order of the reference's `FullErrorStatistics.avsc`
+    * ([[graft.functions.AvroEncode.FullErrorStatisticsSchema]]), which the
+    * streaming Avro encoder binds positionally. */
+  def statsRecord(count: Column, created: Column, updated: Column,
+      topic: Column, errorType: Column)(implicit dc: DecodeConfig): Seq[Column] = Seq(
+    count.as("count"), formatTimestamp(created).as("created"),
+    formatTimestamp(updated).as("updated"), topic.as("topic"),
+    errorType.as("type"))
 
   /** The enrichment-failure message for a null stack trace — ONE definition
     * shared by batch enrichment and the streaming stateless pass (reference:
@@ -197,19 +212,6 @@ object Analyzer {
       message = message,
       inputValue = to_json(deadLetter),
       timestamp = timestamp)
-
-  private def parseErrorDeadLetters(parseErrors: DataFrame)(implicit dc: DecodeConfig): DataFrame = {
-    val err = col("parsed").getField("error")
-    parseErrors.select(
-      coalesce(BruteForce.stringified(col("key")), lit("null")).as("key"),
-      parseErrorDl(err, col("value"), col("timestamp")).as("dead_letter"))
-  }
-
-  private def analyzeErrorDeadLetters(analyzeErrors: DataFrame): DataFrame =
-    analyzeErrors.select(
-      col("key_string").as("key"),
-      analyzeErrorDl(col("enrich_error"), col("dead_letter"),
-        col("timestamp")).as("dead_letter"))
 
   /** DeadLetter for the engine's own processing failure (reference
     * AvroDeadLetterConverter semantics): the synthetic stack trace holds

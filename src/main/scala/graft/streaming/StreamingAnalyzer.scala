@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.functions.{BruteForce, Classify}
 import graft.model.Messages
 import graft.plans.Analyzer
@@ -13,11 +11,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 
 /**
  * Structured-Streaming topology: the reference's continuously-updated outputs
- * (SURVEY §2.3 A1) with Kafka-Streams emission semantics.
+ * (SURVEY §2.3 A1) with Kafka-Streams emission semantics. [[unified]] +
+ * [[fanOut]] is the one topology: one query, one source read, one statistics
+ * state, four sinks.
  *
  * The stateless stages (dispatch, parse, enrich, classify) are the SAME column
- * pipeline as the batch twin ([[Analyzer.parsed]]/[[Analyzer.enriched]]) —
- * one definition, two execution modes. The stateful stage is
+ * pipeline as the batch twin ([[Analyzer.parsed]]/[[Analyzer.enriched]]), and
+ * the `all` and `stats` records are the batch twin's field lists
+ * ([[Analyzer.allRecord]]/[[Analyzer.statsRecord]]) — one definition, two
+ * execution modes. The stateful stage is
  * `flatMapGroupsWithState` in Append mode with NO timeout (reference state
  * never expires), keyed by (topic, error type), holding
  * count/created/updated/seen-example and emitting ONE updated result per input
@@ -112,45 +114,32 @@ object StreamingAnalyzer {
     }
   }
 
-  /** The streaming outputs: `all` is a stateless projection of the shared
-    * column pipeline; `results` is the per-record update stream carrying
-    * stats and (on first occurrence) the example; `errors` unions all THREE
-    * capture sites — parse, analyze (stateless), and aggregate (carried
-    * through `results`, reference's third processValuesCapturingErrors). */
-  final case class StreamingOutputs(all: DataFrame, results: DataFrame, errors: DataFrame)
+  /** The stateful stage alone: the per-record update stream of
+    * [[aggregateWith]] over the classified records, one [[StatResult]] row
+    * each. */
+  final case class StreamingOutputs(results: DataFrame)
 
+  /** The statistics state's input and output without the sinks: parse,
+    * enrich, keep the classified records, then one `groupBy(topic, type)`
+    * exchange into `flatMapGroupsWithState`. [[unified]] is the topology
+    * that runs; this frame measures its stateful stage on its own (perfbench
+    * `state` layer), over the same state key and value schemas. */
   def analyze(input: DataFrame,
       onAggRecord: Enriched => Unit = _ => ())(
       implicit dc: graft.functions.DecodeConfig): StreamingOutputs = {
-    val p = Analyzer.parsed(input)
-    val parseErrors = p.filter(col("parsed").getField("error").isNotNull)
-    val ok = Analyzer.enriched(p.filter(col("parsed").getField("error").isNull))
-    val analyzeErrors = ok.filter(col("enrich_error").isNotNull)
-    val good = ok.filter(col("enrich_error").isNull)
-
-    val all = good.select(
-      Analyzer.elasticId(col("topic"), col("partition"), col("offset")).as("key"),
-      col("key_string").as("context_key"),
-      col("offset"), col("partition"),
-      Analyzer.formatTimestamp(col("timestamp")).as("timestamp"),
-      col("dead_letter"), col("topic"), col("error_type").as("type"))
-
-    // the stateful stage: narrow projection → one `groupBy` exchange →
-    // `flatMapGroupsWithState`
+    val good = Analyzer.enriched(
+        Analyzer.parsed(input).filter(col("parsed").getField("error").isNull))
+      .filter(col("enrich_error").isNull)
     val stats = statsInput(col("topic"), col("error_type"), col("key_string"),
       col("dead_letter"))
-    val results = good
+    StreamingOutputs(good
       .select(stats.fields :+ stats.key1.as("_1") :+ stats.key2.as("_2"): _*)
       .groupBy(col("_1"), col("_2"))
       .as[(String, String), Enriched](StateKey, Encoders.product[Enriched])
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         aggregateWith(onAggRecord))(
         Encoders.product[StatsState], Encoders.product[StatResult])
-      .toDF()
-
-    val errors = Analyzer.errorsOf(parseErrors, analyzeErrors)
-      .unionByName(aggregateErrors(results))
-    StreamingOutputs(all, results, errors)
+      .toDF())
   }
 
   /** A classified record's input to the statistics state: its [[Enriched]]
@@ -266,16 +255,13 @@ object StreamingAnalyzer {
       struct(lit(sink).as("sink"), key.as("key"),
         value.cast("binary").as("value"), dedupId.as("dedup_id"))
 
-    // Stateless rows — the SAME dead-letter builders as Analyzer.errorsOf
+    // Stateless rows — the SAME dead-letter builders as the batch error sink
     // (one definition; parity drift between batch and streaming would
     // otherwise go unnoticed until a sink diff), one per-row case.
     val parseDl = Analyzer.parseErrorDl(err, col("value"), col("timestamp"))
     val analyzeDl = Analyzer.analyzeErrorDl(
       Analyzer.enrichErrorMessage(stackTrace), dl, col("timestamp"))
-    val allValue = to_json(struct(
-      keyString.as("context_key"), col("offset"), col("partition"),
-      Analyzer.formatTimestamp(col("timestamp")).as("timestamp"),
-      dl.as("dead_letter"), col("topic"), errorType.as("type")))
+    val allValue = to_json(struct(Analyzer.allRecord(keyString, dl, errorType): _*))
     val sourceId = Analyzer.elasticId(col("topic"), col("partition"), col("offset"))
     val stats = statsInput(col("topic"), errorType, keyString, dl)
     val carried = p.select(
@@ -314,10 +300,9 @@ object StreamingAnalyzer {
       explode(array_compact(array(
         col("row"),
         when(isResult && col("aggError").isNull, row("stats", statsKey,
-          statsAvroEncode(col("count"),
-            Analyzer.formatTimestamp(timestamp_micros(col("createdUs"))),
-            Analyzer.formatTimestamp(timestamp_micros(col("updatedUs"))),
-            col("topic"), col("errorType")),
+          statsAvroEncode(Analyzer.statsRecord(col("count"),
+            timestamp_micros(col("createdUs")), timestamp_micros(col("updatedUs")),
+            col("topic"), col("errorType")): _*),
           // state recovery restores the batch-start counts and rows apply
           // in sorted order, so a replayed batch re-emits the SAME
           // (key, count) sequence — the count makes the id per-record
@@ -414,41 +399,11 @@ object StreamingAnalyzer {
     }
   }
 
-  /** Aggregate-stage failures projected to the error-sink shape (key +
-    * DeadLetter with the reference's literal description). */
-  def aggregateErrors(results: DataFrame): DataFrame =
-    results.filter(col("aggError").isNotNull).select(
-      col("aggError.recordKey").as("key"),
-      Analyzer.errorDeadLetter(
-        description = lit(graft.model.Messages.ErrorAggregating),
-        errorClass = col("aggError.errorClass"),
-        message = col("aggError.message"),
-        inputValue = col("aggError.inputValue"),
-        timestamp = timestamp_micros(col("aggError.timestampUs"))).as("dead_letter"))
-
-  /** Project the per-record result stream into the stats sink shape
-    * (FullErrorStatistics). */
-  def statsSink(results: DataFrame)(
-      implicit dc: graft.functions.DecodeConfig): DataFrame = results
-    .filter(col("aggError").isNull).select(
-    Analyzer.errorKeyString(col("topic"), col("errorType")).as("key"),
-    col("count"),
-    Analyzer.formatTimestamp(timestamp_micros(col("createdUs"))).as("created"),
-    Analyzer.formatTimestamp(timestamp_micros(col("updatedUs"))).as("updated"),
-    col("topic"), col("errorType").as("type"))
-
-  /** Stats sink values as Confluent-framed binary Avro — the reference's
-    * serde distinction: the stats topic overrides to plain Avro values while
-    * every other sink is string-rendered (DeadLetterAnalyzerTopology
-    * .java:149-152). Shaped as exactly (key, value) so [[toKafka]] passes the
-    * frames through unwrapped. */
-  def statsAvroValues(stats: DataFrame): DataFrame =
-    stats.select(col("key"),
-      statsAvroEncode(col("count"), col("created"), col("updated"),
-        col("topic"), col("type")).as("value"))
-
-  /** Confluent-framed Avro encoder for FullErrorStatistics rows, as a UDF
-    * (no spark-avro jar on the classpath — see [[graft.functions.AvroEncode]]). */
+  /** Confluent-framed Avro encoder for the stats value, as a UDF over the
+    * fields of [[Analyzer.statsRecord]] in their order (no spark-avro jar on
+    * the classpath — see [[graft.functions.AvroEncode]]). The reference's
+    * serde distinction: the stats topic carries plain Avro values, every
+    * other sink string-rendered ones (DeadLetterAnalyzerTopology.java:149-152). */
   private lazy val statsAvroEncode = {
     val enc = graft.functions.AvroEncode(
       graft.functions.AvroEncode.FullErrorStatisticsSchema,
@@ -457,17 +412,4 @@ object StreamingAnalyzer {
         topic: String, tpe: String) =>
       enc.encode(count, created, updated, topic, tpe))
   }
-
-  /** Project first-occurrence results into the examples sink shape (T15: 0-or-1
-    * expansion on the first-example flag). */
-  def examplesSink(results: DataFrame)(
-      implicit dc: graft.functions.DecodeConfig): DataFrame = results
-    .filter(col("aggError").isNull && col("exampleKey").isNotNull)
-    .select(
-      Analyzer.errorKeyString(col("topic"), col("errorType")).as("key"),
-      col("exampleKey"), col("exampleOffset"), col("examplePartition"),
-      Analyzer.formatTimestamp(timestamp_micros(col("exampleTimestampUs")))
-        .as("exampleTimestamp"),
-      col("exampleDescription"), col("topic"), col("errorType").as("type"))
-
 }

@@ -207,7 +207,8 @@ class ParserSpec extends SparkSpec {
     })
     val d = Seq(Tuple1(framed)).toDF("value")
       .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(7 -> deadLetterAvroSchema)).as("d"))
+        .decodedWithAvro(col("value"),
+          graft.functions.StaticSchemas(Map(7 -> deadLetterAvroSchema))).as("d"))
       .select("d.*").head()
     assert(d.getAs[String]("kind") == "dead_letter")
     val dl = d.getAs[Row]("dead_letter")
@@ -224,7 +225,8 @@ class ParserSpec extends SparkSpec {
 
   test("framed Avro dead letter flows through the FULL topology via DecodeConfig") {
     implicit val dc: graft.functions.DecodeConfig =
-      graft.functions.DecodeConfig(Map(7 -> deadLetterAvroSchema))
+      graft.functions.DecodeConfig(
+        graft.functions.StaticSchemas(Map(7 -> deadLetterAvroSchema)))
     val framed = confluentFrame(deadLetterAvroSchema, 7, { r =>
       val schema = new org.apache.avro.Schema.Parser().parse(deadLetterAvroSchema)
       val cause = new org.apache.avro.generic.GenericData.Record(
@@ -403,7 +405,8 @@ class ParserSpec extends SparkSpec {
     val framed = confluentFrame(trSchema, 1, _.put("id", 1))
     val d = Seq(Tuple1(framed)).toDF("value")
       .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(1 -> trSchema)).as("d"))
+        .decodedWithAvro(col("value"),
+          graft.functions.StaticSchemas(Map(1 -> trSchema))).as("d"))
       .select("d.*").head()
     assert(d.getAs[String]("kind") == "avro")
     assert(d.getAs[String]("text").replaceAll("\\s", "") == """{"id":1}""")
@@ -422,7 +425,8 @@ class ParserSpec extends SparkSpec {
     // id 99 is not in the configured map -> not decoded as Avro
     val d = Seq(Tuple1(framed)).toDF("value")
       .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(7 -> deadLetterAvroSchema)).as("d"))
+        .decodedWithAvro(col("value"),
+          graft.functions.StaticSchemas(Map(7 -> deadLetterAvroSchema))).as("d"))
       .select("d.*").head()
     assert(d.getAs[String]("kind") != "dead_letter" && d.getAs[String]("kind") != "avro")
     // no schema map at all (the default decode) -> same fall-through

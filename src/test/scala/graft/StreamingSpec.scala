@@ -1,10 +1,12 @@
 package graft
 
+import graft.plans.Analyzer
 import graft.streaming.StreamingAnalyzer
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming-mode port of the reference topology tests: per-record update
   * emission and first-example-exactly-once-EVER across micro-batches
@@ -17,10 +19,41 @@ class StreamingSpec extends SparkSpec {
       timestamp: java.sql.Timestamp, key: Array[Byte], value: Array[Byte],
       headers: Seq[HeaderKV])
 
-  private def record(offset: Long, tsMillis: Long, key: String, stackTrace: String) =
-    KafkaRecord("my-stream-dead-letter-topic", 0, offset,
+  private def record(offset: Long, tsMillis: Long, key: String, stackTrace: String,
+      topic: String = "my-stream-dead-letter-topic") =
+    KafkaRecord(topic, 0, offset,
       new java.sql.Timestamp(tsMillis), Fixtures.utf8(key),
       Fixtures.utf8(Fixtures.deadLetterJson(stackTrace)), Seq())
+
+  private type Sinks = scala.collection.concurrent.TrieMap[String, Seq[(String, Array[Byte])]]
+
+  /** Starts `unified` under [[StreamingAnalyzer.fanOut]] with one in-memory
+    * collector: each sink's `(key, value)` rows, in write order. */
+  private def collecting(unified: DataFrame, name: String): (StreamingQuery, Sinks) = {
+    val sinks: Sinks = scala.collection.concurrent.TrieMap()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val q = StreamingAnalyzer.fanOut(unified, ckpt) { (sink, frame) =>
+      val rows = frame.collect()
+        .map(r => (r.getAs[String]("key"), r.getAs[Array[Byte]]("value"))).toSeq
+      sinks.updateWith(sink)(prev => Some(prev.getOrElse(Seq.empty) ++ rows))
+    }.queryName(name).start()
+    (q, sinks)
+  }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def jsonOf(value: Array[Byte]) = mapper.readTree(new String(value, "UTF-8"))
+
+  private val statsDecoder = graft.functions.AvroDecode(graft.functions.StaticSchemas(Map(
+    graft.functions.AvroEncode.FullErrorStatisticsId ->
+      graft.functions.AvroEncode.FullErrorStatisticsSchema)))
+
+  /** A stats value decoded from its Confluent frame: field name -> value. */
+  private def statsOf(value: Array[Byte]): Map[String, Any] = {
+    assert(value(0) == 0) // Confluent magic byte
+    import scala.jdk.CollectionConverters._
+    mapper.readValue(statsDecoder.render(value), classOf[java.util.Map[String, Any]])
+      .asScala.toMap
+  }
 
   test("per-record stats emission and first-example-once across micro-batches") {
     val spark2 = spark
@@ -28,89 +61,38 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
 
     val stream = MemoryStream[KafkaRecord]
-    val out = StreamingAnalyzer.analyze(stream.toDF())
-    val q = out.results.writeStream
-      .format("memory").queryName("results").outputMode("append").start()
+    val (q, sinks) = collecting(StreamingAnalyzer.unified(stream.toDF()), "results")
+    val key = s"my-stream-dead-letter-topic:${Fixtures.StackTraceType}"
     try {
-      // micro-batch 1: two records of the same error key -> TWO result rows
+      // micro-batch 1: two records of the same error key -> TWO stats rows
       // (count 1 then count 2), example only on the first
       stream.addData(
         record(0, 1000, "first", Fixtures.StackTrace),
         record(1, 3000, "second", Fixtures.StackTrace))
       q.processAllAvailable()
-      val batch1 = spark.table("results").orderBy("count").collect()
-      assert(batch1.length == 2)
-      assert(batch1(0).getAs[Int]("count") == 1)
-      assert(batch1(0).getAs[String]("exampleKey") == "first")
-      assert(batch1(1).getAs[Int]("count") == 2)
-      assert(batch1(1).getAs[Long]("createdUs") == 1000000L)
-      assert(batch1(1).getAs[Long]("updatedUs") == 3000000L)
-      assert(batch1(1).isNullAt(batch1(1).fieldIndex("exampleKey")))
+      val batch1 = sinks("stats").map(_._2).map(statsOf).sortBy(_("count").asInstanceOf[Int])
+      assert(sinks("stats").map(_._1) == Seq(key, key))
+      assert(batch1.map(_("count")) == Seq(1, 2))
+      // created, updated and topic survive the Avro round trip
+      assert(batch1(1)("created") == "1970-01-01T00:00:01.000")
+      assert(batch1(1)("updated") == "1970-01-01T00:00:03.000")
+      assert(batch1(1)("topic") == "my-stream-dead-letter-topic")
+      assert(batch1(1)("type") == Fixtures.StackTraceType)
+      assert(sinks("examples").size == 1)
+      assert(jsonOf(sinks("examples").head._2).get("exampleKey").asText == "first")
 
       // micro-batch 2: third record, SAME key, LATER batch -> count 3 from
       // persisted state, STILL no example (first-example-once EVER)
       stream.addData(record(2, 2000, "third", Fixtures.StackTrace))
       q.processAllAvailable()
-      val batch2 = spark.table("results").orderBy("count").collect()
-      assert(batch2.length == 3)
-      assert(batch2(2).getAs[Int]("count") == 3)
+      val batch2 = sinks("stats").map(_._2).map(statsOf).sortBy(_("count").asInstanceOf[Int])
+      assert(batch2.map(_("count")) == Seq(1, 2, 3))
       // out-of-order timestamp absorbed by min/max (reference :54-55)
-      assert(batch2(2).getAs[Long]("createdUs") == 1000000L)
-      assert(batch2(2).getAs[Long]("updatedUs") == 3000000L)
-      assert(batch2(2).isNullAt(batch2(2).fieldIndex("exampleKey")))
-
-      val examples = StreamingAnalyzer.examplesSink(spark.table("results")).collect()
-      assert(examples.length == 1)
-      assert(examples.head.getAs[String]("exampleKey") == "first")
-
-      val stats = StreamingAnalyzer.statsSink(spark.table("results"))
-        .orderBy("count").collect()
-      assert(stats.head.getAs[String]("key") ==
-        s"my-stream-dead-letter-topic:${Fixtures.StackTraceType}")
-      assert(stats.last.getAs[String]("created") == "1970-01-01T00:00:01.000")
-      assert(stats.last.getAs[String]("updated") == "1970-01-01T00:00:03.000")
+      assert(batch2(2)("created") == "1970-01-01T00:00:01.000")
+      assert(batch2(2)("updated") == "1970-01-01T00:00:03.000")
+      assert(sinks("examples").size == 1)
+      assert(sinks("examples").head._1 == key)
     } finally q.stop()
-  }
-
-  test("aggregate-stage failure dead-letters the record and the stream continues") {
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
-
-    val stream = MemoryStream[KafkaRecord]
-    // poisoned processor body: the reference's third capture site wraps ANY
-    // aggregate failure (DeadLetterAnalyzerTopology.java:194-215)
-    val out = StreamingAnalyzer.analyze(stream.toDF(),
-      onAggRecord = r =>
-        if (r.key == "poison") throw new IllegalStateException("boom"))
-    val qe = out.errors.writeStream
-      .format("memory").queryName("agg_errs").outputMode("append").start()
-    val qr = out.results.writeStream
-      .format("memory").queryName("agg_results").outputMode("append").start()
-    try {
-      stream.addData(
-        record(0, 1000, "healthy", Fixtures.StackTrace),
-        record(1, 2000, "poison", Fixtures.StackTrace),
-        record(2, 3000, "healthy2", Fixtures.StackTrace))
-      qe.processAllAvailable(); qr.processAllAvailable()
-
-      val errs = spark.table("agg_errs").collect()
-      assert(errs.length == 1)
-      assert(errs.head.getAs[String]("key") == "poison")
-      val dl = errs.head.getAs[Row]("dead_letter")
-      assert(dl.getAs[String]("description") == "Error aggregating dead letters")
-      assert(dl.getAs[Row]("cause")
-        .getAs[String]("error_class") == "java.lang.IllegalStateException")
-      assert(dl.getAs[Row]("cause").getAs[String]("message") == "boom")
-
-      // the poisoned record did NOT touch state: healthy records count 1, 2
-      val stats = StreamingAnalyzer.statsSink(spark.table("agg_results"))
-        .orderBy("count").collect()
-      assert(stats.map(_.getAs[Int]("count")).toSeq == Seq(1, 2))
-      // and it is excluded from the examples sink
-      val ex = StreamingAnalyzer.examplesSink(spark.table("agg_results")).collect()
-      assert(ex.length == 1 && ex.head.getAs[String]("exampleKey") == "healthy")
-    } finally { qe.stop(); qr.stop() }
   }
 
   test("production topology: four sinks from ONE query with ONE stateful operator") {
@@ -121,23 +103,17 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[KafkaRecord]
     // poisoned aggregate body exercises the third error channel through the
     // unified plan alongside the analyze-channel "bad" record
-    val unified = StreamingAnalyzer.unified(stream.toDF(),
+    val (q, collected) = collecting(StreamingAnalyzer.unified(stream.toDF(),
       onAggRecord = r =>
-        if (r.key == "poison") throw new IllegalStateException("boom"))
-    val collected = scala.collection.concurrent.TrieMap[String, Seq[(String, Array[Byte])]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val writer = StreamingAnalyzer.fanOut(unified, ckpt) { (name, frame) =>
-      val rows = frame.collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Array[Byte]]("value"))).toSeq
-      collected.updateWith(name)(prev => Some(prev.getOrElse(Seq.empty) ++ rows))
-    }
-    val q = writer.queryName("single_topo").start()
+        if (r.key == "poison") throw new IllegalStateException("boom")), "single_topo")
     try {
       stream.addData(
         record(0, 1000, "k0", Fixtures.StackTrace),
         record(1, 2000, "k1", Fixtures.StackTrace),
         record(2, 3000, "bad", null), // null stack trace -> analyze error
-        record(3, 4000, "poison", Fixtures.StackTrace)) // aggregate error
+        // aggregate error; the earliest record of its key, so it would be
+        // the key's first example had it touched state
+        record(3, 500, "poison", Fixtures.StackTrace))
       q.processAllAvailable()
 
       // k0, k1, poison — the poison record fails only at the AGGREGATE stage,
@@ -148,28 +124,78 @@ class StreamingSpec extends SparkSpec {
       assert(allJson.contains("\"type\":\"" + Fixtures.StackTraceType + "\""))
 
       // per-record updates: k0 (count 1) + k1 (count 2); poison touches nothing
-      assert(collected("stats").size == 2)
-      val statsJson = graft.functions.AvroDecode(Map(
-        graft.functions.AvroEncode.FullErrorStatisticsId ->
-          graft.functions.AvroEncode.FullErrorStatisticsSchema))
-        .render(collected("stats").last._2).replaceAll("\\s", "")
-      assert(statsJson.contains("\"count\":2"))
+      assert(collected("stats").map(r => statsOf(r._2)("count")).sortBy(_.toString) ==
+        Seq(1, 2))
 
+      // the poisoned record never becomes the example
       assert(collected("examples").size == 1)
-      assert(new String(collected("examples").head._2, "UTF-8")
-        .contains("\"exampleKey\":\"k0\""))
+      assert(jsonOf(collected("examples").head._2).get("exampleKey").asText == "k0")
 
       // both error channels through one plan: analyze ("bad") + aggregate ("poison")
       assert(collected("errors").map(_._1).sorted == Seq("bad", "poison"))
-      val poisonJson = new String(
-        collected("errors").find(_._1 == "poison").get._2, "UTF-8")
-      assert(poisonJson.contains("\"description\":\"Error aggregating dead letters\""))
+      val bad = jsonOf(collected("errors").find(_._1 == "bad").get._2)
+      assert(bad.get("description").asText == "Error analyzing dead letter")
+      val poison = jsonOf(collected("errors").find(_._1 == "poison").get._2)
+      assert(poison.get("description").asText == "Error aggregating dead letters")
+      assert(poison.get("cause").get("error_class").asText ==
+        "java.lang.IllegalStateException")
+      assert(poison.get("cause").get("message").asText == "boom")
 
       // EXACTLY ONE stateful operator and ONE streaming query back the topology
       val progresses = q.recentProgress.toSeq
       assert(progresses.exists(_.stateOperators.nonEmpty))
       assert(progresses.forall(_.stateOperators.length <= 1))
     } finally q.stop()
+  }
+
+  test("batch twin and stream agree on the all, stats and errors records") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+
+    val first = Seq(
+      record(0, 1000, "a0", Fixtures.StackTrace),
+      record(1, 2000, "b0", Fixtures.ElasticTrace, topic = "other-dead-letter-topic"),
+      record(2, 1500, "bad", null)) // null stack trace -> analyze error
+    val second = Seq(
+      record(3, 3000, "a1", Fixtures.StackTrace),
+      record(4, 500, "a2", Fixtures.StackTrace)) // out of order: new created
+    val batch = Analyzer.analyze(envelopeDf((first ++ second).map(r =>
+      Row(r.topic, r.partition, r.offset, r.timestamp, r.key, r.value, Seq()))))
+    val stream = MemoryStream[KafkaRecord]
+    val (q, streamed) = collecting(StreamingAnalyzer.unified(stream.toDF()), "parity_topo")
+    try {
+      stream.addData(first: _*)
+      q.processAllAvailable()
+      stream.addData(second: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    // all: each streamed value is its batch row without `key`, field for field
+    val allFields = batch.all.schema.filterNot(_.name == "key")
+    streamed("all").foreach { case (_, v) =>
+      import scala.jdk.CollectionConverters._
+      assert(jsonOf(v).fieldNames.asScala.toSeq == allFields.map(_.name))
+    }
+    val parsedAll = streamed("all").map { case (k, v) => (k, new String(v, "UTF-8")) }
+      .toDF("key", "value")
+      .select(col("key"), from_json(col("value"),
+        org.apache.spark.sql.types.StructType(allFields)).as("r"))
+      .select("key", "r.*")
+    assert(parsedAll.collect().toSet == batch.all.collect().toSet)
+    assert(streamed("all").size == 4)
+
+    // stats: the last streamed record per key is the batch snapshot
+    val lastStats = streamed("stats").map { case (k, v) => k -> statsOf(v) }
+      .groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2).maxBy(_("count").asInstanceOf[Int]) }
+    val statsFields = batch.stats.columns.filterNot(_ == "key").toSeq
+    val batchStats = batch.stats.collect()
+      .map(r => r.getAs[String]("key") -> r.getValuesMap[Any](statsFields)).toMap
+    assert(batchStats.size == 2)
+    assert(lastStats == batchStats)
+
+    assert(streamed("errors").map(_._1).sorted ==
+      batch.errors.select("key").as[String].collect().toSeq.sorted)
   }
 
   test("unified topology decodes each record once: one source scan, one stateful operator") {
@@ -345,26 +371,6 @@ class StreamingSpec extends SparkSpec {
     assert(bySink("errors") == 1, bySink.toString)   // the one analyze error
   }
 
-  test("stats sink values are Confluent-framed Avro (serde distinction)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val stats = Seq(("t:cls", 2, "1970-01-01T00:00:01.000",
-      "1970-01-01T00:00:03.000", "t", "cls"))
-      .toDF("key", "count", "created", "updated", "topic", "type")
-    val framed = StreamingAnalyzer.statsAvroValues(stats).head()
-    assert(framed.getAs[String]("key") == "t:cls")
-    val bytes = framed.getAs[Array[Byte]]("value")
-    assert(bytes(0) == 0) // Confluent magic byte
-    // round-trip through the decode tier recovers the record
-    val json = graft.functions.AvroDecode(Map(
-      graft.functions.AvroEncode.FullErrorStatisticsId ->
-        graft.functions.AvroEncode.FullErrorStatisticsSchema)).render(bytes)
-    val compact = json.replaceAll("\\s", "")
-    assert(compact.contains("\"count\":2"))
-    assert(compact.contains("\"topic\":\"t\""))
-    assert(compact.contains("\"created\":\"1970-01-01T00:00:01.000\""))
-  }
-
   test("AnalyzerMain CLI parsing mirrors the reference surface") {
     val cfg = AnalyzerMain.parseArgs(Array(
       "--brokers", "broker:9092",
@@ -422,6 +428,27 @@ class StreamingSpec extends SparkSpec {
         "--extra-output-topics", "stats=s,example=x"))
     }
     assert(label.getMessage.contains("example=x"), label.getMessage)
+    // each of these fails at startup, naming its flag, with the usage text
+    val base = Array("--brokers", "b", "--input-pattern", "p",
+      "--output-topic", "out", "--error-topic", "err")
+    val emptyTopic = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(base ++ Array("--extra-output-topics", "stats="))
+    }
+    val repeated = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(base ++ Array("--output-topic", "again"))
+    }
+    val missing = java.nio.file.Files.createTempDirectory("schemas").resolve("missing.avsc")
+    val unreadable = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(base ++ Array("--avro-schema-files", s"7=$missing")).decodeConfig
+    }
+    val zone = intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(base ++ Array("--timestamp-zone", "Mars/Olympus_Mons"))
+    }
+    Seq("--extra-output-topics" -> emptyTopic, "--output-topic" -> repeated,
+        "--avro-schema-files" -> unreadable, "--timestamp-zone" -> zone).foreach {
+      case (flag, e) =>
+        assert(e.getMessage.contains(flag) && e.getMessage.contains("usage:"), e.getMessage)
+    }
   }
 
   test("stateful analyzer runs green under the RocksDB state store provider") {
@@ -436,10 +463,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(key, AnalyzerMain.stateStoreProviderClass("rocksdb").get)
     try {
       val stream = MemoryStream[KafkaRecord]
-      val out = StreamingAnalyzer.analyze(stream.toDF())
-      val q = out.results.writeStream
-        .format("memory").queryName("rocksdb_results")
-        .outputMode("append").start()
+      val (q, sinks) = collecting(StreamingAnalyzer.unified(stream.toDF()), "rocksdb_topo")
       try {
         stream.addData(
           record(0, 1000, "first", Fixtures.StackTrace),
@@ -448,11 +472,9 @@ class StreamingSpec extends SparkSpec {
         // second micro-batch reads the first's persisted RocksDB state
         stream.addData(record(2, 2000, "third", Fixtures.StackTrace))
         q.processAllAvailable()
-        val rows = spark.table("rocksdb_results").orderBy("count").collect()
-        assert(rows.length == 3)
-        assert(rows.map(_.getAs[Int]("count")).toSeq == Seq(1, 2, 3))
-        assert(rows(0).getAs[String]("exampleKey") == "first")
-        assert(rows(2).isNullAt(rows(2).fieldIndex("exampleKey")))
+        assert(sinks("stats").map(r => statsOf(r._2)("count")) == Seq(1, 2, 3))
+        assert(sinks("examples").size == 1)
+        assert(jsonOf(sinks("examples").head._2).get("exampleKey").asText == "first")
         // the provider actually in effect is RocksDB, not the heap default:
         // RocksDB's provider reports its own custom state metrics
         assert(q.lastProgress.json.contains("rocksdb"),
@@ -464,26 +486,6 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset(key)
       }
     }
-  }
-
-  test("streaming error channel emits dead letters for null stack traces") {
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
-
-    val stream = MemoryStream[KafkaRecord]
-    val out = StreamingAnalyzer.analyze(stream.toDF())
-    val q = out.errors.writeStream
-      .format("memory").queryName("errs").outputMode("append").start()
-    try {
-      stream.addData(record(0, 0, "key", null))
-      q.processAllAvailable()
-      val errs = spark.table("errs").collect()
-      assert(errs.length == 1)
-      assert(errs.head.getAs[String]("key") == "key")
-      assert(errs.head.getAs[Row]("dead_letter")
-        .getAs[String]("description") == "Error analyzing dead letter")
-    } finally q.stop()
   }
 
   test("checkpoint guard fails fast on a legacy per-sink layout") {
@@ -524,13 +526,14 @@ class StreamingSpec extends SparkSpec {
       }.queryName(name).start()
     // the two-scan plan's shape: the source forked into a stateless branch
     // and the stateful one, unioned
-    val outs = StreamingAnalyzer.analyze(stream.toDF())
-    val twoScan = outs.all
+    val in = stream.toDF()
+    val twoScan = Analyzer.analyzeParsed(Analyzer.parsed(in)).all
       .select(lit("all").as("sink"), col("key"),
         col("context_key").cast("binary").as("value"), col("key").as("dedup_id"))
-      .unionByName(outs.results.select(lit("stats").as("sink"), col("topic").as("key"),
-        col("count").cast("string").cast("binary").as("value"),
-        concat(col("errorType"), lit(":"), col("count").cast("string")).as("dedup_id")))
+      .unionByName(StreamingAnalyzer.analyze(in).results
+        .select(lit("stats").as("sink"), col("topic").as("key"),
+          col("count").cast("string").cast("binary").as("value"),
+          concat(col("errorType"), lit(":"), col("count").cast("string")).as("dedup_id")))
     val q1 = start(twoScan, "two_scan_topo")
     try {
       stream.addData(

@@ -1,12 +1,13 @@
 // Checkpoint-compatibility probe for the `unified` + `fanOut` streaming query.
 //
 // Each run appends one 6-record input file (2 topics x 2 error types) under
-// $CK_BASE/src, runs the query over a parquet file source with RocksDB state
-// until it is idle, and prints the stats sink's dedup ids (`topic:type:count`)
-// as one `STATS=` line. Run it once with the old commit's classes, then again
-// on the same CK_BASE with the new classes: the counts must continue (the
-// second run prints 2..4, not 1..2). A fresh CK_BASE run with the new classes
-// gives the state schema to compare with the old one:
+// $CK_BASE/src, runs the query over a parquet file source with the state store
+// that `AnalyzerMain.main` runs (RocksDB) until it is idle, and prints the
+// stats sink's dedup ids (`topic:type:count`) as one `STATS=` line. Run it
+// once with the old commit's classes, then again on the same CK_BASE with
+// the new classes: the counts must continue (the second run prints 2..4, not
+// 1..2). A fresh CK_BASE run with the new classes gives the state schema to
+// compare with the old one:
 //   cmp old/ck/state/0/0/_metadata/schema new/ck/state/0/0/_metadata/schema
 // Each run also writes the query's last executed micro-batch plan to
 // $CK_BASE/plan.txt, stripped of what differs between runs of one plan:
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
 val base = sys.env("CK_BASE")
 val n = sys.env("CK_FILE").toInt
 spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-  "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  graft.AnalyzerMain.stateStoreProviderClass("rocksdb").get)
 spark.conf.set("spark.sql.shuffle.partitions", "2")
 
 def deadLetter(trace: String) =

@@ -3,7 +3,7 @@ package graft
 import graft.sources.DeadLetterSource
 import graft.streaming.StreamingAnalyzer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -34,9 +34,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  * (DeadLetterAnalyzerTopology.java:139-158). Each micro-batch's offset range
  * is scanned and decoded once: the rendered sink rows ride through the one
  * stateful exchange beside the fields the statistics need (the shuffle trade
- * is stated at [[StreamingAnalyzer.unified]]). A checkpoint of the earlier
- * plan, which decoded each record twice, restarts on this one through
- * [[migrateTwoScanCheckpoint]].
+ * is stated at [[StreamingAnalyzer.unified]]). The statistics state lives in
+ * Spark's RocksDB state store, like the reference's one RocksDB-backed
+ * `"statistics"` store (DeadLetterAnalyzerTopology.java:220-226).
  *
  * The Kafka connector (`spark-sql-kafka-0-10`) is not part of the Spark
  * distribution; without it [[topology]] fails at construction with a
@@ -49,8 +49,7 @@ object AnalyzerMain {
       errorTopic: String, statsTopic: String, examplesTopic: String,
       checkpointDir: String, avroSchemaFiles: Map[Int, String] = Map.empty,
       schemaRegistryUrl: Option[String] = None,
-      timestampZone: Option[String] = None,
-      stateStore: String = "rocksdb") {
+      timestampZone: Option[String] = None) {
     /** Decode configuration: schema files read AND parse-validated once at
       * startup (fail fast on malformed schema JSON instead of at first
       * decode on an executor), wrapped in the static [[graft.functions
@@ -81,12 +80,11 @@ object AnalyzerMain {
     "usage: AnalyzerMain --brokers B --input-pattern P --output-topic T " +
       "--error-topic E [--extra-output-topics stats=S,examples=X] " +
       "[--checkpoint-dir DIR] [--avro-schema-files id=path,...] " +
-      "[--schema-registry-url URL] [--timestamp-zone host|ZONE_ID] " +
-      "[--state-store rocksdb|hdfs]"
+      "[--schema-registry-url URL] [--timestamp-zone host|ZONE_ID]"
 
   private val Flags = Set("brokers", "input-pattern", "output-topic",
     "error-topic", "extra-output-topics", "checkpoint-dir", "avro-schema-files",
-    "schema-registry-url", "timestamp-zone", "state-store")
+    "schema-registry-url", "timestamp-zone")
 
   def parseArgs(args: Array[String]): Config = {
     // strict pairwise parse: every token must be a known --flag followed by
@@ -108,26 +106,31 @@ object AnalyzerMain {
     def req(k: String): String =
       kv.getOrElse(k, throw new IllegalArgumentException(s"missing --$k\n$Usage"))
     val out = req("output-topic")
-    val extra = kv.get("extra-output-topics")
-      .map(_.split(",").map { e =>
-        e.split("=", 2) match {
-          case Array(label @ ("stats" | "examples"), topic) if topic.nonEmpty =>
-            label -> topic
-          case _ => throw new IllegalArgumentException(
-            s"malformed --extra-output-topics entry '$e' " +
-              s"(want stats=topic or examples=topic)\n$Usage")
-        }
-      }.toMap)
-      .getOrElse(Map.empty)
-    val schemaFiles = kv.get("avro-schema-files")
-      .map(_.split(",").map { e =>
-        e.split("=", 2) match {
-          case Array(id, path) if id.forall(_.isDigit) => id.toInt -> path
-          case _ => throw new IllegalArgumentException(
-            s"malformed --avro-schema-files entry '$e' (want numericId=path)\n$Usage")
-        }
-      }.toMap)
-      .getOrElse(Map.empty[Int, String])
+    // a flag's comma-separated key=value entries, each key at most once: a
+    // repeated key fails rather than silently keeping its last value
+    def entries[K](flag: String, want: String)(
+        entry: PartialFunction[Array[String], (K, String)]): Map[K, String] = {
+      val parsed = kv.get(flag).toSeq.flatMap(_.split(",")).map { e =>
+        entry.applyOrElse(e.split("=", 2), (_: Array[String]) =>
+          throw new IllegalArgumentException(
+            s"malformed --$flag entry '$e' (want $want)\n$Usage"))
+      }
+      val keys = parsed.map(_._1)
+      keys.diff(keys.distinct).headOption.foreach { k =>
+        throw new IllegalArgumentException(s"repeated --$flag entry '$k'\n$Usage")
+      }
+      parsed.toMap
+    }
+    val extra = entries[String]("extra-output-topics",
+        "stats=topic or examples=topic") {
+      case Array(label @ ("stats" | "examples"), topic) if topic.nonEmpty =>
+        label -> topic
+    }
+    val schemaFiles = entries[Int]("avro-schema-files",
+        s"numericId=path, id at most ${Int.MaxValue}") {
+      case Array(id, path) if id.forall(_.isDigit) && id.toIntOption.isDefined =>
+        id.toInt -> path
+    }
     // reference parity: it renders sink timestamps in the HOST zone
     // (Formatter.java:60-62); "host" resolves the submitting JVM's zone.
     // Default (absent) keeps the engine's deterministic session-UTC rendering.
@@ -138,16 +141,6 @@ object AnalyzerMain {
         catch { case e: java.time.DateTimeException => throw new IllegalArgumentException(
           s"unknown --timestamp-zone '$z': ${e.getMessage}\n$Usage") }
     }
-    // state-store backend: RocksDB by default — the statistics state is keyed
-    // by (topic, type) but at 100 TB-scale topic cardinality (plus the
-    // streaming-dedup stores keyed by digest) the default HDFS-backed
-    // provider holds every key on the executor HEAP; RocksDB (in Spark core
-    // since 3.2, no extra dependency) spills to local disk and bounds memory.
-    // "hdfs" restores the heap provider for tiny-state deployments.
-    val stateStore = kv.getOrElse("state-store", "rocksdb")
-    if (!Set("rocksdb", "hdfs").contains(stateStore))
-      throw new IllegalArgumentException(
-        s"unknown --state-store '$stateStore' (want rocksdb|hdfs)\n$Usage")
     Config(
       brokers = req("brokers"),
       inputPattern = req("input-pattern"),
@@ -168,17 +161,18 @@ object AnalyzerMain {
       }),
       avroSchemaFiles = schemaFiles,
       schemaRegistryUrl = kv.get("schema-registry-url"),
-      timestampZone = tsZone,
-      stateStore = stateStore)
+      timestampZone = tsZone)
   }
 
-  /** The provider class behind a `--state-store` choice. */
+  /** The state store provider class for a store name: `"rocksdb"` names
+    * Spark's RocksDB provider, which [[main]] always sets — it keeps the
+    * statistics state on executor-local disk rather than the heap. Any other
+    * name gives `None` (Spark's default heap-backed provider). The `String`
+    * parameter stays only because the benchmark harness calls
+    * `stateStoreProviderClass("rocksdb")`. */
   def stateStoreProviderClass(stateStore: String): Option[String] =
-    stateStore match {
-      case "rocksdb" => Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case _ => None // "hdfs": Spark's default heap-backed provider
-    }
+    Option.when(stateStore == "rocksdb")(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Build the full production topology as ONE streaming query: a single
     * Kafka source read, a single statistics state, one checkpoint; each
@@ -220,85 +214,14 @@ object AnalyzerMain {
             "(e.g. spark-submit --packages) to run the dead-letter analyzer", e)
     }
 
-  /** Refuse to silently discard pre-unified state. The four-query layout
-    * checkpointed each sink under `$dir/<sink>`; the unified query
-    * checkpoints at `$dir` itself. An in-place upgrade restarted on the old
-    * root would come up as a brand-new query — Kafka offsets reset and the
-    * statistics state (counts, first-example-ever flags) silently dropped.
-    * Detecting legacy sink checkpoints with no unified state fails fast and
-    * tells the operator to decide. */
-  def assertCheckpointLayout(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacy = Seq("all", "stats", "examples", "errors")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(root, s"$s/offsets")))
-    val unifiedStarted = fs.exists(new org.apache.hadoop.fs.Path(root, "offsets"))
-    if (legacy.nonEmpty && !unifiedStarted)
-      throw new IllegalStateException(
-        s"checkpoint dir $dir holds per-sink checkpoints of the pre-unified " +
-          s"topology (${legacy.mkString(", ")}) but no unified-query state; " +
-          "starting here would reset Kafka offsets and discard the " +
-          "statistics state. Move the legacy checkpoints aside to start " +
-          "fresh, or point --checkpoint-dir at a new location.")
-  }
-
-  /** Carry a unified checkpoint of the earlier two-scan plan over to the
-    * one-scan plan, Kafka offsets and statistics state intact. That plan
-    * forked the parsed source into a stateless and a stateful branch, so
-    * Spark logged its one source twice: each offset-log entry
-    * (`offsets/<batch>`: a version line, a metadata line, then one offset
-    * line per source) holds two identical offset lines, and Spark refuses to
-    * restart a query whose source count changed. The state schemas already
-    * match. Each such entry is rewritten atomically with one offset line;
-    * one-line entries are left alone, so running this again is a no-op. Two
-    * different offset lines would mean the branches had read different
-    * ranges, so that no one offset keeps both the sinks and the state
-    * exact: that fails before the query starts. */
-  def migrateTwoScanCheckpoint(spark: SparkSession, dir: String): Unit = {
-    val offsets = new org.apache.hadoop.fs.Path(dir, "offsets")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = offsets.getFileSystem(conf)
-    if (fs.exists(offsets)) {
-      val files = org.apache.spark.sql.execution.streaming.checkpointing
-        .CheckpointFileManager.create(offsets, conf)
-      fs.listStatus(offsets).map(_.getPath)
-        .filter(p => p.getName.nonEmpty && p.getName.forall(_.isDigit))
-        .foreach { entry =>
-          val in = fs.open(entry)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toVector finally in.close()
-          lines.drop(2) match {
-            case Seq(_) => ()
-            case Seq(a, b) if a == b =>
-              val out = files.createAtomic(entry, true)
-              try out.write(lines.take(3).mkString("\n").getBytes("UTF-8"))
-              catch { case e: Throwable => out.cancel(); throw e }
-              out.close()
-            case sources =>
-              throw new IllegalStateException(
-                s"offset-log entry $entry logs ${sources.size} source " +
-                  "offsets, not one source once or twice with one offset; " +
-                  "the analyzer reads one source, and no single offset keeps " +
-                  "both its sinks and its statistics state exact. Move the " +
-                  "checkpoint aside to start fresh " +
-                  "(Kafka offsets and statistics state reset), or point " +
-                  "--checkpoint-dir at a new location.")
-          }
-        }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName(s"dead-letter-analyzer-${cfg.outputTopic}")
       .config("spark.sql.session.timeZone", "UTC")
-    val spark = stateStoreProviderClass(cfg.stateStore)
-      .map(builder.config("spark.sql.streaming.stateStore.providerClass", _))
-      .getOrElse(builder)
+      .config("spark.sql.streaming.stateStore.providerClass",
+        stateStoreProviderClass("rocksdb").get)
       .getOrCreate()
-    assertCheckpointLayout(spark, cfg.checkpointDir)
-    migrateTwoScanCheckpoint(spark, cfg.checkpointDir)
     topology(spark, cfg).queryName("dead-letter-analyzer").start()
     spark.streams.awaitAnyTermination()
   }

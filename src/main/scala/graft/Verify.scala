@@ -28,6 +28,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      spark.sparkContext.setJobDescription(name) // names the query in operator logs
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -46,6 +47,7 @@ object Verify {
     // CORRECTNESS alone is self-consistency for oracle-mirrored LSH ops);
     // skipped under the dev-loop filter (full-gate runs only)
     if (only.isEmpty) try {
+      spark.sparkContext.setJobDescription("recall")
       val recallJson = Recall.toJson(Recall.metrics(spark, sfDir))
       Files.writeString(Paths.get(s"$outDir/recall.json"), recallJson)
       println(s"[verify] recall: $recallJson")

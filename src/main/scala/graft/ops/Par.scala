@@ -55,8 +55,15 @@ object Par {
     else {
       // observable fallback (advisor r3): the estimate can be wildly high for
       // aggregated/joined subtrees, and a silently degraded join also changes
-      // the stream-side cost model the skew notes in Dedup rely on
-      System.err.println(s"[graft] maybeBroadcast: declined (estimate " +
+      // the stream-side cost model the skew notes in Dedup rely on. The line
+      // names the calling site and the job description (the query name under
+      // graft.Verify), so each decline traces back to its join.
+      def inPar(f: StackTraceElement) = f.getClassName.takeWhile(_ != '$') == "graft.ops.Par"
+      val site = Thread.currentThread.getStackTrace.dropWhile(!inPar(_)).find(!inPar(_))
+        .fold("?")(f => s"${f.getFileName}:${f.getLineNumber}")
+      val query = Option(df.sparkSession.sparkContext.getLocalProperty("spark.job.description"))
+        .fold("")(d => s" in $d")
+      System.err.println(s"[graft] maybeBroadcast: declined at $site$query (estimate " +
         s"$estimate B > threshold $threshold B) — shuffle-hash fallback")
       df.hint("shuffle_hash")
     }

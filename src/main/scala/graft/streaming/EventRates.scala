@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * first-seen dedup ([[StreamingDedup]]).
   *
   * Spark-first: `withWatermark` + `window()` + `groupBy().count()` is
-  * entirely built-in — windows are state-store entries keyed by
+  * entirely built-in — windows are state store entries keyed by
   * (window, group), partial-aggregated map-side, and EVICTED once the
   * watermark passes the window end, which is what bounds state at an
   * unbounded stream: without the watermark every window ever seen stays

@@ -392,23 +392,9 @@ class StreamingSpec extends SparkSpec {
       "--brokers", "b", "--input-pattern", "p",
       "--output-topic", "out", "--error-topic", "err"))
     assert(dflt.statsTopic == "out-stats" && dflt.examplesTopic == "out-examples")
-    // state store defaults to RocksDB (the 100 TB-scale provider); "hdfs"
-    // restores the heap default; anything else fails fast
-    assert(dflt.stateStore == "rocksdb")
+    // the one state store main runs
     assert(AnalyzerMain.stateStoreProviderClass("rocksdb").get
       .endsWith("RocksDBStateStoreProvider"))
-    assert(AnalyzerMain.stateStoreProviderClass("hdfs").isEmpty)
-    val hdfs = AnalyzerMain.parseArgs(Array(
-      "--brokers", "b", "--input-pattern", "p",
-      "--output-topic", "out", "--error-topic", "err",
-      "--state-store", "hdfs"))
-    assert(hdfs.stateStore == "hdfs")
-    intercept[IllegalArgumentException] {
-      AnalyzerMain.parseArgs(Array(
-        "--brokers", "b", "--input-pattern", "p",
-        "--output-topic", "out", "--error-topic", "err",
-        "--state-store", "leveldb"))
-    }
     intercept[IllegalArgumentException] {
       AnalyzerMain.parseArgs(Array("--brokers", "b"))
     }
@@ -444,17 +430,27 @@ class StreamingSpec extends SparkSpec {
     val zone = intercept[IllegalArgumentException] {
       AnalyzerMain.parseArgs(base ++ Array("--timestamp-zone", "Mars/Olympus_Mons"))
     }
-    Seq("--extra-output-topics" -> emptyTopic, "--output-topic" -> repeated,
-        "--avro-schema-files" -> unreadable, "--timestamp-zone" -> zone).foreach {
+    def entryFails(flag: String, value: String) = flag -> intercept[IllegalArgumentException] {
+      AnalyzerMain.parseArgs(base ++ Array(flag, value))
+    }
+    // an empty or out-of-Int schema id, and a label or id given twice
+    val entryFaults = Seq(
+      entryFails("--avro-schema-files", "=a.avsc"),
+      entryFails("--avro-schema-files", "99999999999=a.avsc"),
+      entryFails("--extra-output-topics", "stats=a,stats=b"),
+      entryFails("--avro-schema-files", "7=a,7=b"))
+    (Seq("--extra-output-topics" -> emptyTopic, "--output-topic" -> repeated,
+        "--avro-schema-files" -> unreadable, "--timestamp-zone" -> zone) ++
+        entryFaults).foreach {
       case (flag, e) =>
         assert(e.getMessage.contains(flag) && e.getMessage.contains("usage:"), e.getMessage)
     }
   }
 
   test("stateful analyzer runs green under the RocksDB state store provider") {
-    // the production default (AnalyzerMain --state-store rocksdb): the
-    // statistics state lives in RocksDB on executor-local disk rather than
-    // on the heap — cross-micro-batch state semantics must be identical
+    // the one store AnalyzerMain runs: the statistics state lives in RocksDB
+    // on executor-local disk rather than on the heap — cross-micro-batch
+    // state semantics must be identical
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
@@ -488,70 +484,28 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("checkpoint guard fails fast on a legacy per-sink layout") {
-    val root = java.nio.file.Files.createTempDirectory("ckpt").toFile
-    // legacy layout: per-sink checkpoints with offsets, no unified state
-    new java.io.File(root, "stats/offsets").mkdirs()
-    new java.io.File(root, "all/offsets").mkdirs()
-    val e = intercept[IllegalStateException] {
-      AnalyzerMain.assertCheckpointLayout(spark, root.getAbsolutePath)
-    }
-    assert(e.getMessage.contains("pre-unified"))
-    // once the unified query has state, restarts proceed
-    new java.io.File(root, "offsets").mkdirs()
-    AnalyzerMain.assertCheckpointLayout(spark, root.getAbsolutePath)
-    // and a fresh directory is fine
-    val fresh = java.nio.file.Files.createTempDirectory("ckpt2").toFile
-    AnalyzerMain.assertCheckpointLayout(spark, fresh.getAbsolutePath)
-  }
-
-  /** The source offset lines of each offset-log entry under `ckpt`. */
-  private def loggedOffsets(ckpt: String): Seq[Seq[String]] =
-    new java.io.File(ckpt, "offsets").listFiles().toSeq
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong).map { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().drop(2).toList finally src.close()
-      }
-
-  test("a two-scan checkpoint restarts on the one-scan plan with its state intact") {
+  test("a unified checkpoint restarts with its state intact") {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
     val stream = MemoryStream[KafkaRecord]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-two-scan").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-restart").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    def start(topology: org.apache.spark.sql.DataFrame, name: String) =
-      StreamingAnalyzer.fanOut(topology, ckpt) { (sink, frame) =>
-        frame.collect().foreach(r => seen.add(sink -> r.getAs[String]("dedup_id"))); ()
+    def start(name: String) =
+      StreamingAnalyzer.fanOut(StreamingAnalyzer.unified(stream.toDF()), ckpt) {
+        (sink, frame) =>
+          frame.collect().foreach(r => seen.add(sink -> r.getAs[String]("dedup_id"))); ()
       }.queryName(name).start()
-    // the two-scan plan's shape: the source forked into a stateless branch
-    // and the stateful one, unioned
-    val in = stream.toDF()
-    val twoScan = Analyzer.analyzeParsed(Analyzer.parsed(in)).all
-      .select(lit("all").as("sink"), col("key"),
-        col("context_key").cast("binary").as("value"), col("key").as("dedup_id"))
-      .unionByName(StreamingAnalyzer.analyze(in).results
-        .select(lit("stats").as("sink"), col("topic").as("key"),
-          col("count").cast("string").cast("binary").as("value"),
-          concat(col("errorType"), lit(":"), col("count").cast("string")).as("dedup_id")))
-    val q1 = start(twoScan, "two_scan_topo")
+    val q1 = start("unified_topo")
     try {
       stream.addData(
         record(0, 1000, "k0", Fixtures.StackTrace),
         record(1, 2000, "k1", Fixtures.StackTrace))
       q1.processAllAvailable()
     } finally q1.stop()
-    val logged = loggedOffsets(ckpt)
-    assert(logged.nonEmpty && logged.forall(l => l.size == 2 && l.distinct.size == 1),
-      logged.toString)
-
-    AnalyzerMain.migrateTwoScanCheckpoint(spark, ckpt)
-    assert(loggedOffsets(ckpt) == logged.map(_.take(1)))
-    AnalyzerMain.migrateTwoScanCheckpoint(spark, ckpt) // a no-op once migrated
-    assert(loggedOffsets(ckpt) == logged.map(_.take(1)))
 
     seen.clear()
-    val q2 = start(StreamingAnalyzer.unified(stream.toDF()), "two_scan_resumed")
+    val q2 = start("unified_resumed")
     try {
       stream.addData(record(2, 3000, "k2", Fixtures.StackTrace))
       q2.processAllAvailable()
@@ -564,27 +518,6 @@ class StreamingSpec extends SparkSpec {
       resumed.toString)
     assert(!resumed.exists(_._1 == "examples"), resumed.toString)
     assert(resumed.count(_._1 == "all") == 1, resumed.toString)
-  }
-
-  test("offset-log migration leaves one-source entries alone and refuses differing offsets") {
-    def ckpt(sourceOffsets: String*) = {
-      val root = java.nio.file.Files.createTempDirectory("ckpt-scans")
-      val offsets = java.nio.file.Files.createDirectories(root.resolve("offsets"))
-      java.nio.file.Files.writeString(offsets.resolve("0"),
-        ("v1" +: """{"batchWatermarkMs":0}""" +: sourceOffsets).mkString("\n"))
-      root.toString
-    }
-    val one = ckpt("""{"logOffset":0}""")
-    AnalyzerMain.migrateTwoScanCheckpoint(spark, one)
-    assert(loggedOffsets(one) == Seq(Seq("""{"logOffset":0}""")))
-    val e = intercept[IllegalStateException] {
-      AnalyzerMain.migrateTwoScanCheckpoint(spark,
-        ckpt("""{"logOffset":0}""", """{"logOffset":1}"""))
-    }
-    assert(e.getMessage.contains("2 source offsets"), e.getMessage)
-    // a query that never started has no offset log
-    AnalyzerMain.migrateTwoScanCheckpoint(spark,
-      java.nio.file.Files.createTempDirectory("ckpt-fresh").toString)
   }
 
   test("lost lineage-cut blocks fail the batch; a restart replays it with exactly-once effect") {

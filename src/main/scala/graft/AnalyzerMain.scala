@@ -21,6 +21,12 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  *                                  (default: <output-topic>-stats/-examples,
  *                                  mirroring the reference's topic labels)
  *   --checkpoint-dir path          checkpoint location of the unified query
+ *   --avro-schema-files id=path,...  Avro writer schemas by numeric id, read
+ *                                  from local files (static registry)
+ *   --schema-registry-url url      Confluent schema registry; ids it does not
+ *                                  know fall back to --avro-schema-files
+ *   --timestamp-zone host|ZONE_ID  zone of rendered sink timestamps
+ *                                  (default: the session's UTC rendering)
  *
  * Pointing --error-topic at a topic matching --input-pattern closes the
  * reference's feedback loop: the engine re-analyzes its own failures (the
@@ -156,7 +162,7 @@ object AnalyzerMain {
           "[graft] WARNING: no --checkpoint-dir given; defaulting to " +
             "/tmp/graft-analyzer-checkpoints (NODE-LOCAL). A restart on " +
             "another node starts offsets and statistics state from scratch " +
-            "— pass a durable shared path (HDFS/S3) for any real deployment.")
+            "- pass a durable shared path (HDFS/S3) for any real deployment.")
         "/tmp/graft-analyzer-checkpoints"
       }),
       avroSchemaFiles = schemaFiles,

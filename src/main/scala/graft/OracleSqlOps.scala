@@ -3512,7 +3512,7 @@ SELECT url_norm, url, registered_domain, path,
 FROM (SELECT *, length(registered_domain) AS l FROM cn
       -- the target URL-hygiene gate (UrlOps.filterReason, the same gate
       -- the streaming twin applies): a blocked-domain / spam-path /
-      -- over-length DISCOVERY never enters the frontier — on the chain
+      -- over-length DISCOVERY never enters the frontier - on the chain
       -- fixture only the blocklist rule can fire (spam-mirror origins)
       WHERE registered_domain <> 'spam-mirror.net'
         AND NOT regexp_matches(lower(path), '(casino|viagra|porn|xxx)')

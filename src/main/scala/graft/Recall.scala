@@ -338,10 +338,10 @@ object Recall {
       "counts evidencing pruning (t80) vs the documented no-prune stress " +
       "regime (t45). semantic_cell_capture_t45 is a capture CEILING, not a " +
       "recall bar: it reports the fraction of exact near-dup pairs falling " +
-      "within one quantizer cell — the SemDeDup trade semanticDedup states; " +
+      "within one quantizer cell - the SemDeDup trade semanticDedup states; " +
       "semantic_full_capture_t45 is the COMPOSED operator " +
       "(semanticDedupFull: within-cell pairs united with the banded-LSH " +
-      "tier) and IS held to the bar — the cross-cell recovery as code. " +
+      "tier) and IS held to the bar - the cross-cell recovery as code. " +
       "The fixture_* metrics measure the DESIGNED regime on " +
       "a deterministic clustered corpus (12 well-separated Gaussian " +
       "clusters, within-cluster cosine ~0.9): IVF with a Lloyd-refined " +
@@ -353,7 +353,7 @@ object Recall {
       "bar: ADC distances over 8 subspace codes cannot order ~50 " +
       "near-identical clustermates in the exact top-3 (quantization noise " +
       "exceeds the cosine gaps), and no nprobe/bits setting within the " +
-      "bounded-codebook design changes that regime — the RETRIEVAL entry " +
+      "bounded-codebook design changes that regime - the RETRIEVAL entry " +
       "point is the composed two-stage operator (ivfPqRerankTopK), held to " +
       "the bar as fixture_ann_pq_rerank_top3, with its shortlist ceiling " +
       "held >= 0.9 as fixture_ann_pq_adc_rerank30; OpsSpec pins all three " +
@@ -361,8 +361,8 @@ object Recall {
       "fixture_ann_append_drift{,_rebuild,_retrain} quantify the " +
       "frozen-quantizer append caveat at drift delta 0.6 AND its remedy: " +
       "recall of the appended index vs a full rebuild on drifted-region " +
-      "queries against the same exact baseline — the gap is the price of " +
-      "appending instead of re-training at that drift — and the _retrain " +
+      "queries against the same exact baseline - the gap is the price of " +
+      "appending instead of re-training at that drift - and the _retrain " +
       "number is retrainAnnIndex applied to the appended index (quantizers " +
       "re-derived from the index's own stored vectors, no corpus pass), " +
       "which must recover the rebuild's recall (COVERAGE.md records the " +

@@ -108,9 +108,6 @@ object Messages {
 
   /** reference ConnectDeadLetterParser.java:84-85 */
   val ConnectDescriptionTemplate = "Error in stage %s (%s) in %s[%d]"
-
-  /** reference ContextEnricher.java:52-53 */
-  val NoMetadataAvailable = "No metadata available"
 }
 
 /** Minimal JSON text escaping shared by the engine's hand-rendered JSON

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{BruteForce, DecodeConfig, HeaderOps}
 import graft.functions.HeaderOps._
-import graft.model.{Headers => H, Messages, Schemas}
+import graft.model.{Headers => H, Messages}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -126,8 +126,4 @@ object Parsers {
         stackTrace.value, timestamp),
       err)
   }
-
-  /** Null dead-letter struct with the envelope's schema — used when a branch
-    * errors out. */
-  def nullDeadLetter: Column = lit(null).cast(Schemas.deadLetter)
 }

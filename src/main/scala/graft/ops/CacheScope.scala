@@ -17,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * pressure (judge r2 finding: un-unpersisted persists are a leak in a real
  * service).
  *
- * Four flavors, picked per call site: [[track]] (lazy persist),
- * [[trackEager]] (persist + count, so size gates read the actual size),
- * [[barrier]] and [[barrierLazy]] (lineage cut, eager or fused into the
- * caller's next action). Every lineage cut is a `localCheckpoint`: its
+ * Three flavors, picked per call site: [[track]] (lazy persist, for a
+ * frame with more than one reader), [[barrier]] and [[barrierLazy]]
+ * (lineage cut, eager or fused into the caller's next action). A frame
+ * that needs filling now (a size decision, or several scans in one plan)
+ * goes through [[Par.measured]], which tracks it and fills it with one job.
+ * Every lineage cut is a `localCheckpoint`: its
  * blocks live on the executors, so losing an executor fails the query that
  * reads the cut. Durability is the caller's; the streaming analyzer's comes
  * from the query's own checkpointed offsets and state plus replay.
@@ -65,29 +67,13 @@ object CacheScope {
     df
   }
 
-  /** [[track]] + materialize NOW (one count() action). Catalyst's size
-    * estimate for an aggregated sketch table is pessimistic by orders of
-    * magnitude (measured: 668 MB estimated vs ~400 KB actual for the banded
-    * minhash table at sf0.001), so a plan-time [[Par.maybeBroadcast]] gate
-    * reading the ESTIMATE silently downgrades every band-branch join to a
-    * shuffle join at any scale. Filling the cache first makes the gate read
-    * the ACTUAL InMemoryRelation size: small sketches broadcast, and at
-    * corpus scale the gate still declines — now from a true measurement.
-    * The cost is one early job that scans data the downstream joins were
-    * about to materialize into the cache anyway. */
-  def trackEager(df: DataFrame): DataFrame = {
-    val t = track(df)
-    t.count()
-    t
-  }
-
   private val trackedRdds =
     new ConcurrentHashMap[SparkSession,
       ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]]()
 
   /** Materialize `df` NOW and TRUNCATE its lineage (`localCheckpoint`):
     * the returned frame's logical plan is a leaf over the materialized
-    * blocks. [[trackEager]] fills the cache but leaves the original plan in
+    * blocks. A filled cache ([[Par.measured]]) leaves the original plan in
     * place — every Dataset built DOWNSTREAM still re-ANALYZES the full
     * lineage, which for the composed crawl recipes (rendered-fixture URL →
     * parse → render → extract expression trees) is a scale-INDEPENDENT

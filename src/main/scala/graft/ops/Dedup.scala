@@ -92,8 +92,8 @@ object Dedup {
     * Scale shape: the corpus side is a pure per-row double-digest projection
     * (scan speed); the reference side collapses to its DISTINCT digest sets —
     * bounded by the reference corpus, which in every use above is orders of
-    * magnitude smaller than the corpus — eager-tracked (the estimate under
-    * distinct is garbage) and broadcast, so no corpus-scale shuffle at all;
+    * magnitude smaller than the corpus — measured by the gate (the estimate
+    * under distinct is garbage) and broadcast, so no corpus-scale shuffle at all;
     * past the gate the fallback is a shuffle-hash join on the 16-byte
     * digest. */
   def crossDedup(corpus: DataFrame, reference: DataFrame): DataFrame =
@@ -110,9 +110,9 @@ object Dedup {
       .select(col("norm_hash")).distinct()
       .withColumn("nm_hit", lit(true))
     corpusFp.select(col("doc_id"), col("text_hash"), col("norm_hash"))
-      .join(maybeBroadcast(CacheScope.trackEager(refExact)),
+      .join(maybeBroadcast(refExact),
         Seq("text_hash"), "left")
-      .join(maybeBroadcast(CacheScope.trackEager(refNorm)),
+      .join(maybeBroadcast(refNorm),
         Seq("norm_hash"), "left")
       .select(col("doc_id"),
         coalesce(col("x_hit"), lit(false)).as("exact_hit"),
@@ -229,10 +229,10 @@ object Dedup {
     // row per doc, so the set side broadcasts while it fits the session
     // threshold; past that, maybeBroadcast leaves both joins hash-partitioned
     // on doc_id (AQE picks the strategy).
-    val sets = CacheScope.trackEager(hashedTokenSets(docs))
+    val sets = maybeBroadcast(CacheScope.track(hashedTokenSets(docs)))
     val joined = pairs
-      .join(maybeBroadcast(sets.as("sa")), col("a") === col("sa.doc_id"))
-      .join(maybeBroadcast(sets.as("sb")), col("b") === col("sb.doc_id"))
+      .join(sets.as("sa"), col("a") === col("sa.doc_id"))
+      .join(sets.as("sb"), col("b") === col("sb.doc_id"))
     val inter = graft.functions.ArrayExprs.sortedIntersectSize(
       col("sa.tks"), col("sb.tks"))
     joined.select(col("a"), col("b"),
@@ -290,8 +290,10 @@ object Dedup {
     // candidate stream. The trade-off is a wider build side / wider fallback
     // shuffle rows; at sketch sizes (ints, deduped tokens) the per-row set is
     // bounded and the candidate stream is orders of magnitude larger than the
-    // doc table, so fusing wins on both counts.
-    val banded = CacheScope.trackEager(bandedWithSets(docs, k, bands, tokenizer))
+    // doc table, so fusing wins on both counts. Filled now: every band
+    // branch scans it.
+    val banded = Par.measured(bandedWithSets(docs, k, bands, tokenizer))
+    val build = maybeBroadcast(banded)
     val inter = graft.functions.ArrayExprs.sortedIntersectSize(
       col("l.tks"), col("r.tks"))
     (0 until bands).map { b =>
@@ -305,7 +307,7 @@ object Dedup {
       // sort-merge join. Past the broadcast threshold the branches fall back
       // to partitioned joins on the band key, where AQE's skew splitting
       // handles the giant-bucket case.
-      banded.as("l").join(maybeBroadcast(banded.as("r")),
+      banded.as("l").join(build.as("r"),
           guard && col("l.doc_id") < col("r.doc_id"))
         .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
           (inter.cast("double") /
@@ -344,7 +346,8 @@ object Dedup {
       .filter(size(tokenizer.tokens(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
         md5(col("text").cast("binary")).as("dig"))
-    val grpSrc = CacheScope.trackEager(keyed
+    // grpSrc and repDocs each feed several branches: filled now
+    val grpSrc = Par.measured(keyed
       .groupBy(col("dig"), col("source")).agg(count(lit(1)).as("cnt")))
     // (a) within-digest pairs, closed form on the bounded (dig, source) table
     val sameSrc = grpSrc.filter(col("cnt") > 1)
@@ -357,15 +360,16 @@ object Dedup {
         (col("l.cnt") * col("r.cnt")).as("n"))
     // (b) sketch on one representative per digest; expand by count products
     val reps = keyed.groupBy(col("dig")).agg(min(col("doc_id")).as("doc_id"))
-    val repDocs = CacheScope.trackEager(reps
+    val repDocs = Par.measured(reps
       .join(docs.select(col("doc_id"), col("text")), "doc_id"))
-    val repDig = repDocs.select(col("doc_id"), col("dig"))
+    val repDig = maybeBroadcast(repDocs.select(col("doc_id"), col("dig")))
+    val grpB = maybeBroadcast(grpSrc)
     val expanded = minhashLsh(repDocs.select(col("doc_id"), col("text")),
         threshold = threshold, tokenizer = tokenizer)
-      .join(maybeBroadcast(repDig.toDF("a", "dig_a")), "a")
-      .join(maybeBroadcast(repDig.toDF("b", "dig_b")), "b")
-      .join(maybeBroadcast(grpSrc.toDF("dig_a", "sa", "ca")), "dig_a")
-      .join(maybeBroadcast(grpSrc.toDF("dig_b", "sb", "cb")), "dig_b")
+      .join(repDig.toDF("a", "dig_a"), "a")
+      .join(repDig.toDF("b", "dig_b"), "b")
+      .join(grpB.toDF("dig_a", "sa", "ca"), "dig_a")
+      .join(grpB.toDF("dig_b", "sb", "cb"), "dig_b")
       .select(least(col("sa"), col("sb")).as("source_a"),
         greatest(col("sa"), col("sb")).as("source_b"),
         (col("ca") * col("cb")).as("n"))
@@ -419,13 +423,15 @@ object Dedup {
     val chunkCols = (0 until nChunks).map { c =>
       shiftright(col("simhash"), c * bitsPer).bitwiseAND(lit(mask)).as(s"c$c")
     }
-    val fps = CacheScope.trackEager(
+    // filled now: every chunk branch scans it
+    val fps = Par.measured(
       simhash(docs).select(col("doc_id") +: col("simhash") +: chunkCols: _*))
+    val build = maybeBroadcast(fps)
     (0 until nChunks).map { c =>
       val guard = (0 until c)
         .map(p => col(s"l.c$p") =!= col(s"r.c$p"))
         .foldLeft(col(s"l.c$c") === col(s"r.c$c"))(_ && _)
-      fps.as("l").join(maybeBroadcast(fps.as("r")),
+      fps.as("l").join(build.as("r"),
           guard && col("l.doc_id") < col("r.doc_id"))
         .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
           bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).as("hamming"))
@@ -617,7 +623,7 @@ object Dedup {
     }
     if (!converged)
       System.err.println(s"[graft] Dedup.clusters hit maxIter=$maxIter before " +
-        "convergence — a component with diameter > maxIter is only partially " +
+        "convergence - a component with diameter > maxIter is only partially " +
         "merged; raise maxIter (or pre-contract with large-star rounds)")
     labels.select(col("doc_id"), col("label").as("cluster_id"),
       (col("doc_id") === col("label")).as("is_canonical"))
@@ -950,7 +956,7 @@ object Dedup {
       case s if s == Tokenizer.Whitespace.toString => Tokenizer.Whitespace
       case s if s == Tokenizer.BpeIsh.toString => Tokenizer.BpeIsh
       case other => throw new IllegalArgumentException(
-        s"unrecognized tokenizer '$other' in index meta — refusing the " +
+        s"unrecognized tokenizer '$other' in index meta - refusing the " +
           "Whitespace fallback (a silently mistokenized probe blinds the " +
           "near tier both ways); rebuild the index or upgrade this reader")
     }
@@ -1094,7 +1100,7 @@ object Dedup {
       require(er == 0 || newEmb.isDefined,
         s"$dir carries the embedding sketch tier: appendToIndex needs the " +
           "batch's embeddings (newEmb) so appended docs stay probeable")
-      val batchIds = CacheScope.trackEager(
+      val batchIds = CacheScope.track(
         newDocs.select(col("doc_id")).distinct())
       val existing = s.read.parquet(s"$dir/digests")
         .select(col("hid").as("doc_id"))
@@ -1104,7 +1110,7 @@ object Dedup {
           .join(broadcast(batchIds), Seq("doc_id"), "left_semi"))
         case None => existing
       }
-      val docs = CacheScope.trackEager(
+      val docs = CacheScope.track(
         newDocs.join(broadcast(skip), Seq("doc_id"), "left_anti"))
       collapseBanded(bandedWithSets(docs, k, bands, tokenizer), bands)
         .write.mode("append").parquet(s"$dir/banded")
@@ -1192,7 +1198,7 @@ object Dedup {
   def compactIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = TempDirs.dirLock(dir).synchronized {
     dedupTombstones(s, dir).foreach { t0 =>
-      val t = CacheScope.trackEager(t0.select(col("doc_id")))
+      val t = CacheScope.track(t0.select(col("doc_id")))
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(!isBucketedLayout(fs, dir),
@@ -1211,7 +1217,7 @@ object Dedup {
       def live(name: String, idCol: String): DataFrame = {
         val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
         require(fs.exists(p),
-          s"$dir/$name is missing but the index declares it — a previous " +
+          s"$dir/$name is missing but the index declares it - a previous " +
             s"swap crashed; restore the ${name}_pre_swap copy before " +
             "compacting (tombstones left intact)")
         s.read.parquet(p.toString)
@@ -1227,7 +1233,7 @@ object Dedup {
       // uncached; the write below re-scans, the normal offline-job shape)
       tables.foreach { case (n, df) =>
         require(!df.isEmpty,
-          s"compaction would empty $dir/$n — a full-corpus takedown should " +
+          s"compaction would empty $dir/$n - a full-corpus takedown should " +
             "delete the index (or rebuild over the surviving history), not " +
             "compact it; tombstones left intact")
       }
@@ -1268,7 +1274,7 @@ object Dedup {
   def compactIndexBucketed(s: org.apache.spark.sql.SparkSession, dir: String,
       prefix: String): Unit = TempDirs.dirLock(dir).synchronized {
     dedupTombstones(s, dir).foreach { t0 =>
-      val t = CacheScope.trackEager(t0.select(col("doc_id")))
+      val t = CacheScope.track(t0.select(col("doc_id")))
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(isBucketedLayout(fs, dir),
@@ -1294,10 +1300,10 @@ object Dedup {
           new org.apache.hadoop.fs.Path(meta.location))
         require(actual == expected,
           s"catalog table ${prefix}_$n is located at $actual, not the " +
-            s"$expected this compaction targets — dir/prefix mismatch")
+            s"$expected this compaction targets - dir/prefix mismatch")
         val spec = meta.bucketSpec
           .getOrElse(throw new IllegalStateException(
-            s"catalog table ${prefix}_$n carries no bucket spec — " +
+            s"catalog table ${prefix}_$n carries no bucket spec - " +
               "not a writeIndexBucketed artifact"))
         require(spec.bucketColumnNames == Seq(key),
           s"${prefix}_$n is bucketed on ${spec.bucketColumnNames}, " +
@@ -1311,7 +1317,7 @@ object Dedup {
       val hasEmb = s.read.parquet(s"$dir/meta").head()
         .getAs[Int]("emb_rows") > 0
       require(!hasEmb || fs.exists(embPath),
-        s"$dir/emb is missing but the index declares it — a previous " +
+        s"$dir/emb is missing but the index declares it - a previous " +
           "swap crashed; restore the emb_pre_swap copy before " +
           "compacting (tombstones left intact)")
       val liveEmb = if (hasEmb)
@@ -1320,7 +1326,7 @@ object Dedup {
       // takedown refuses with every table and the tombstones intact
       (bucketed.map(b => (b._1, b._4)) ++ liveEmb.map(("emb", _))).foreach {
         case (n, df) => require(!df.isEmpty,
-          s"compaction would empty $dir/$n — a full-corpus takedown should " +
+          s"compaction would empty $dir/$n - a full-corpus takedown should " +
             "delete the index (or rebuild over the surviving history), not " +
             "compact it; tombstones left intact")
       }
@@ -1457,7 +1463,7 @@ object Dedup {
     val k = index.k; val bands = index.bands
     val tokenizer = index.tokenizer
     // exact tier: digest-collision min per batch doc
-    val bHash = CacheScope.trackEager(
+    val bHash = CacheScope.track(
       batch.select(col("doc_id"), md5(col("text")).as("__h")))
     val exact = index.digests
       .join(maybeBroadcast(bHash.select(col("__h")).distinct()), Seq("__h"),
@@ -1483,14 +1489,15 @@ object Dedup {
     // Output is unchanged either way: every tier ends in min(hid) per
     // batch doc.
     val bandedH = index.banded
-    val bandedB = CacheScope.trackEager(bandedWithSets(batch, k, bands, tokenizer))
+    val bandedB = maybeBroadcast(
+      CacheScope.track(bandedWithSets(batch, k, bands, tokenizer)))
     val inter = graft.functions.ArrayExprs.sortedIntersectSize(
       col("h.tks"), col("b.tks"))
     val near = (0 until bands).map { bd =>
       val guard = (0 until bd)
         .map(p => col(s"h.band$p") =!= col(s"b.band$p"))
         .foldLeft(col(s"h.band$bd") === col(s"b.band$bd"))(_ && _)
-      bandedH.as("h").join(maybeBroadcast(bandedB.as("b")), guard)
+      bandedH.as("h").join(bandedB.as("b"), guard)
         .select(col("b.doc_id").as("doc_id"), col("h.doc_id").as("hid"),
           (inter.cast("double") /
             (size(col("h.tks")) + size(col("b.tks")) - inter)).as("j"))
@@ -1521,7 +1528,7 @@ object Dedup {
       // on the SMALL (batch) side only (judge r8 #1 regressed the probe by
       // collapsing the HISTORY side per probe, which is now free).
       val heRep = he
-      val bGrpE = CacheScope.trackEager(
+      val bGrpE = CacheScope.track(
         embSketch(be, "doc_id", index.embRowsPerBand, index.embBands)
           .groupBy(arrayDigest(col("ev")).as("__evh"))
           .agg(min(col("doc_id")).as("rep_id"), first(col("ev")).as("ev"),
@@ -1537,11 +1544,11 @@ object Dedup {
       // join → distinct MAP side ran 148 MB of shuffle write through 2
       // tasks, ~6.5 s of the query; Par.spread is a no-op past the
       // small-input threshold, so at corpus scale nothing changes)
-      // materialize the (caller-persisted) history sketch NOW so the size
-      // gate below reads the ACTUAL cached size — the CacheScope.trackEager
-      // rationale: Catalyst's estimate for the aggregated sketch subtree is
-      // pessimistic by orders of magnitude and would always decline
-      val heSpread = Par.spread(CacheScope.trackEager(heRep))
+      // measure the (caller-persisted) history sketch NOW so the spread and
+      // the verify-side choice below read its ACTUAL cached size: Catalyst's
+      // estimate for the aggregated sketch subtree is pessimistic by orders
+      // of magnitude
+      val heSpread = Par.spread(Par.measured(heRep))
       val hband = heSpread.select(col("hid"), posexplode(col("keys")).as(Seq("band", "key")))
       val bband = bSk.select(col("doc_id"), posexplode(col("keys")).as(Seq("band", "key")))
       val cand = hband.join(maybeBroadcast(bband), Seq("band", "key"))
@@ -1559,18 +1566,14 @@ object Dedup {
       // 148 MB candidate stream to hash-join a 3 MB history table. When
       // the slim history projection fits the threshold, broadcast IT —
       // the candidate stream is never re-shuffled.
-      val heSlim = heSpread.select(col("hid"), col("ev").as("hev"),
-        col("n2").as("hn2"))
+      val heSlim = Par.sized(heSpread.select(col("hid"), col("ev").as("hev"),
+        col("n2").as("hn2")))
       val candB = cand
         .join(maybeBroadcast(
           bSk.select(col("doc_id"), col("ev").as("bev"), col("n2").as("bn2"))),
           "doc_id")
-      val thr = org.apache.spark.sql.graftbridge
-        .autoBroadcastThreshold(batch.sparkSession)
-      val embPerRep = (if (thr > 0 && org.apache.spark.sql.graftbridge
-            .planSizeBytes(heSlim) <= thr)
-          candB.join(broadcast(heSlim), "hid")
-        else maybeBroadcast(candB).join(heSlim, "hid"))
+      val embPerRep = (if (heSlim.fits) candB.join(broadcast(heSlim.df), "hid")
+        else maybeBroadcast(candB).join(heSlim.df, "hid"))
         .filter(graft.functions.VectorExprs.dotProduct(col("bev"), col("hev"))
           / sqrt(col("bn2") * col("hn2")) >= embThreshold)
         .groupBy(col("doc_id")).agg(min(col("hid")).as("emb_id"))
@@ -1617,7 +1620,8 @@ object Dedup {
       slice(t, lit(1), greatest(n - 1, lit(0))),
       slice(t, lit(2), greatest(n - 1, lit(0))),
       (x, y) => concat(x, lit(" "), y))
-    val sets = CacheScope.trackEager(docs.select(col("doc_id"),
+    // filled now: the postings and both verify joins scan it
+    val sets = Par.measured(docs.select(col("doc_id"),
       array_sort(array_distinct(transform(bigrams, b => tokHash(b)))).as("bgs")))
     val postings = sets.select(col("doc_id"), explode(col("bgs")).as("bg"))
     val rare = postings.groupBy(col("bg"))
@@ -1636,9 +1640,10 @@ object Dedup {
       .select(col("a"), explode(col("ds")).as("b"))
       .filter(col("a") < col("b"))
       .distinct()
+    val setsB = maybeBroadcast(sets)
     val joined = candidates
-      .join(maybeBroadcast(sets.as("sa")), col("a") === col("sa.doc_id"))
-      .join(maybeBroadcast(sets.as("sb")), col("b") === col("sb.doc_id"))
+      .join(setsB.as("sa"), col("a") === col("sa.doc_id"))
+      .join(setsB.as("sb"), col("b") === col("sb.doc_id"))
     val inter = graft.functions.ArrayExprs.sortedIntersectSize(
       col("sa.bgs"), col("sb.bgs"))
     joined.select(col("a"), col("b"),

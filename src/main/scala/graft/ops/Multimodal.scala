@@ -423,13 +423,15 @@ object Multimodal {
       val mask = (1L << width) - 1
       shiftright(col("phash"), c * bitsPer).bitwiseAND(lit(mask)).as(s"c$c")
     }
-    val fps = CacheScope.trackEager(
+    // filled now: every chunk branch scans it
+    val fps = Par.measured(
       phash(docs).select(col("doc_id") +: col("phash") +: chunkCols: _*))
+    val build = maybeBroadcast(fps)
     (0 until nChunks).map { c =>
       val guard = (0 until c)
         .map(p => col(s"l.c$p") =!= col(s"r.c$p"))
         .foldLeft(col(s"l.c$c") === col(s"r.c$c"))(_ && _)
-      fps.as("l").join(maybeBroadcast(fps.as("r")),
+      fps.as("l").join(build.as("r"),
           guard && col("l.doc_id") < col("r.doc_id"))
         .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
           bit_count(col("l.phash").bitwiseXOR(col("r.phash"))).as("hamming"))

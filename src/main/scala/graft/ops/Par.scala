@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, graftbridge}
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.storage.StorageLevel
 
 /** Partition-width and join-strategy guards shared by the operators. */
 object Par {
@@ -30,42 +31,66 @@ object Par {
   }
 
   /**
-   * Broadcast hint gated on the optimizer's size estimate: hint only when the
-   * estimate fits `spark.sql.autoBroadcastJoinThreshold`, otherwise hint a
-   * SHUFFLE-HASH build on this side and let the stream side stay unsorted. An
-   * unconditional `broadcast()` bypasses the threshold entirely — at corpus
-   * scale that is a driver OOM / 8 GB broadcast-limit failure, so the 100 TB
-   * fallback must be code, not a comment (judge r2 finding).
+   * The one broadcast rule, for the INTENDED-broadcast side of a join (a
+   * sketch, probe, rate or vector table). Threshold (`spark.sql.
+   * autoBroadcastJoinThreshold`) <= 0: no broadcast, no hint. Catalyst's
+   * free estimate fits: broadcast. Otherwise decide on the MEASURED size
+   * ([[measured]]; no job when the estimate already reads filled caches):
+   * broadcast when it fits, else hint a SHUFFLE-HASH build on this side.
    *
-   * The fallback is `shuffle_hash`, not Catalyst's default sort-merge: every
-   * caller passes the INTENDED-broadcast side (a sketch/probe/vector table
-   * that merely overflows the threshold), so a per-partition hash map of it
-   * is always cheap, while the OTHER side is the unbounded stream
-   * (candidate pairs, banded corpus). Sort-merge would sort that stream —
-   * measured on the 100× stress corpus, the declined 28 MB vector table put
-   * a ~500M-row wide candidate stream through UnsafeExternalSorter and
-   * filled the disk with sort spill; the hash build streams it with zero
-   * sort state. Same hash partitioning either way (the skew notes in Dedup
-   * still hold); AQE still re-plans skewed partitions.
+   * The estimate alone cannot decline: for aggregated and joined subtrees
+   * it is orders of magnitude high (sf0.01: 1.1e19 B over ~60k events). An
+   * unconditional `broadcast()` cannot stand in either: at corpus scale it
+   * is a driver OOM / 8 GB broadcast-limit failure. The fallback is
+   * `shuffle_hash`, not sort-merge, because the OTHER side is the unbounded
+   * stream: on the 100x stress corpus a declined 28 MB vector table put a
+   * ~500M-row candidate stream through sort spill until the disk filled;
+   * the hash build streams it with zero sort state. The hint follows a
+   * measured decline only, so it never pins an estimate's mistake past
+   * where AQE's runtime sizes could correct it. Each decision on a measured
+   * size logs one stderr line: calling site, job description (the query
+   * under graft.Verify), estimate, measured size, threshold and decision.
    */
   def maybeBroadcast(df: DataFrame): DataFrame = {
+    val s = sized(df)
+    if (s.fits) broadcast(s.df) else if (s.measured) s.df.hint("shuffle_hash") else s.df
+  }
+
+  /** The rule's verdict on a join side: the frame to join (the cached one
+    * once measured), whether it fits, and whether the size was measured. */
+  final case class Sized(df: DataFrame, fits: Boolean, measured: Boolean)
+
+  /** [[maybeBroadcast]]'s decision without the hint, for a caller that
+    * chooses WHICH side of a join to broadcast. */
+  def sized(df: DataFrame): Sized = {
     val threshold = graftbridge.autoBroadcastThreshold(df.sparkSession)
-    val estimate = graftbridge.planSizeBytes(df)
-    if (threshold > 0 && estimate <= threshold) broadcast(df)
+    lazy val estimate = graftbridge.planSizeBytes(df)
+    if (threshold <= 0) Sized(df, fits = false, measured = false)
+    else if (estimate <= threshold) Sized(df, fits = true, measured = false)
     else {
-      // observable fallback (advisor r3): the estimate can be wildly high for
-      // aggregated/joined subtrees, and a silently degraded join also changes
-      // the stream-side cost model the skew notes in Dedup rely on. The line
-      // names the calling site and the job description (the query name under
-      // graft.Verify), so each decline traces back to its join.
+      val m = if (graftbridge.sizeIsMeasured(df)) df else measured(df)
+      val size = graftbridge.planSizeBytes(m)
       def inPar(f: StackTraceElement) = f.getClassName.takeWhile(_ != '$') == "graft.ops.Par"
       val site = Thread.currentThread.getStackTrace.dropWhile(!inPar(_)).find(!inPar(_))
         .fold("?")(f => s"${f.getFileName}:${f.getLineNumber}")
       val query = Option(df.sparkSession.sparkContext.getLocalProperty("spark.job.description"))
         .fold("")(d => s" in $d")
-      System.err.println(s"[graft] maybeBroadcast: declined at $site$query (estimate " +
-        s"$estimate B > threshold $threshold B) — shuffle-hash fallback")
-      df.hint("shuffle_hash")
+      System.err.println(s"[graft] maybeBroadcast: measured at $site$query: estimate " +
+        s"$estimate B, measured $size B, threshold $threshold B -> " +
+        (if (size <= threshold) "broadcast" else "shuffle-hash"))
+      Sized(m, size <= threshold, measured = true)
     }
+  }
+
+  /** Persist `df` (registered for [[CacheScope.releaseAll]] unless the
+    * session already caches it) and fill it with one `count()` job: its
+    * size estimate is then the size of its cached blocks. Operators also
+    * fill a frame that several branches of one plan scan (band and chunk
+    * self-joins, per-subspace codebooks): AQE runs one materialization job
+    * per scan of a cache that is still empty when the query starts. */
+  def measured(df: DataFrame): DataFrame = {
+    val t = if (df.storageLevel == StorageLevel.NONE) CacheScope.track(df) else df
+    t.count()
+    t
   }
 }

@@ -1128,11 +1128,10 @@ object Robots {
   def applyTrapCaps(frontier: DataFrame, traps: DataFrame,
       capPerPrefix: Int = 100): DataFrame = {
     require(capPerPrefix >= 0, s"capPerPrefix >= 0: $capPerPrefix")
-    // the localized set is bounded (prefix cardinality) — materialize it
-    // once so the broadcast build does not re-run the report pipeline
-    val loc = CacheScope.trackEager(traps.filter(col("trap_localized"))
+    // the localized set is bounded (prefix cardinality)
+    val loc = traps.filter(col("trap_localized"))
       .select(col("registered_domain").as("__t_dom"),
-        col("path_prefix").as("trap_prefix")))
+        col("path_prefix").as("trap_prefix"))
     val joined = frontier.join(Par.maybeBroadcast(loc),
       frontier("registered_domain") === col("__t_dom") &&
         (frontier("path") === col("trap_prefix") ||
@@ -1307,8 +1306,8 @@ object Robots {
       // already-known candidates, ≤ |cand|), and the bounded hit set
       // broadcasts back into the anti-join. Gating, both ways from
       // near-actual sizes (seen is a union of materialized leaves —
-      // checkpoint blocks — so its estimate is honest; cand is eager-
-      // cached on this path so ITS gate reads the actual cached size, not
+      // checkpoint blocks — so its estimate is honest; cand is measured
+      // on this path, so ITS gate reads the actual cached size, not
       // Catalyst's pessimistic aggregate estimate): a small seen set
       // (the local-bench regime) keeps the classic one-shuffle anti-join —
       // the inversion's extra per-hop jobs (cand count + two broadcast
@@ -1322,12 +1321,12 @@ object Robots {
         gb.planSizeBytes(seen) > invertSeenFactor * thr
       val fresh =
         if (invert) {
-          val candE = CacheScope.trackEager(cand)
-          val candNorms = candE.select(col("url_norm"))
-          if (gb.planSizeBytes(candNorms) <= thr) {
+          val candE = Par.measured(cand)
+          val candNorms = Par.sized(candE.select(col("url_norm")))
+          if (candNorms.fits) {
             // seen rows are unique by construction (hop additions are
             // anti-joined before entering seen) — `hit` needs no distinct
-            val hit = seen.join(broadcast(candNorms), Seq("url_norm"),
+            val hit = seen.join(broadcast(candNorms.df), Seq("url_norm"),
               "left_semi")
             candE.join(broadcast(hit), Seq("url_norm"), "left_anti")
           } else candE.join(seen, Seq("url_norm"), "left_anti")

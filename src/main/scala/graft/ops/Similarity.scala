@@ -71,17 +71,16 @@ object Similarity {
     * positive and ranks 2..k+1 become its hard negatives, re-ranked 1..k.
     *
     * Built on [[bruteForceTopK]] (k+1) — one corpus scan, queries broadcast;
-    * the per-query positive table is |Q| rows, eager-tracked and broadcast
-    * back over the negative rows. At corpus scale the exact scan swaps for
-    * the two-stage [[ivfPqRerankTopK]] shortlist with the same downstream
-    * shape (the positive/negative split only needs SOME top-(k+1) list). */
+    * the |Q|-row positive table broadcasts back over the negative rows. At
+    * corpus scale [[ivfPqRerankTopK]]'s shortlist replaces the exact scan
+    * (the positive/negative split only needs SOME top-(k+1) list). */
   def hardNegatives(embeddings: DataFrame, queryPred: Column,
       k: Int = 5): DataFrame = {
     val top = CacheScope.track(bruteForceTopK(embeddings, queryPred, k + 1))
     val pos = top.filter(col("rank") === 1)
       .select(col("query_id"), col("neighbor_id").as("positive_id"))
     top.filter(col("rank") > 1)
-      .join(Par.maybeBroadcast(CacheScope.trackEager(pos)), Seq("query_id"))
+      .join(Par.maybeBroadcast(pos), Seq("query_id"))
       .select(col("query_id"), col("positive_id"),
         (col("rank") - 1).cast("int").as("neg_rank"),
         col("neighbor_id"), col("cosine"))
@@ -233,11 +232,8 @@ object Similarity {
       .select(col("query_id"), col("qe"), col("qn2"), col("cid").as("cell"))
     // probes carry full query vectors — small by the operator's query-subset
     // contract, but unbounded in principle, so the hint is size-gated with a
-    // partitioned cell-join fallback. Eager-tracked: the window-filtered
-    // cross-join's plan-time estimate is corpus-scale garbage, so the gate
-    // must read the MATERIALIZED probe size or it declines at every scale
-    // and reshuffles the corpus per ANN query.
-    val scored = celled.join(Par.maybeBroadcast(CacheScope.trackEager(probes)),
+    // partitioned cell-join fallback
+    val scored = celled.join(Par.maybeBroadcast(probes),
         celled("cell") === probes("cell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineWithNorms(col("qe"), col("embedding"), col("qn2"), col("n2")).as("cosine"))
@@ -318,7 +314,7 @@ object Similarity {
   def rpLshMultiTableTopK(embeddings: DataFrame, queryPred: Column, k: Int = 3,
       dims: Int = 64, tables: Int = LshTables,
       bitsPerTable: Int = LshBitsPerTable): DataFrame = {
-    val e = CacheScope.trackEager(withNorm2(embeddings)
+    val e = CacheScope.track(withNorm2(embeddings)
       .select(col("vec_id"), col("embedding"), col("n2"),
         graft.functions.VectorExprs.signBandKeys(
           col("embedding"), dims, bitsPerTable, tables).as("keys")))
@@ -327,7 +323,7 @@ object Similarity {
     val qprobes = e.filter(queryPred).select(col("vec_id").as("query_id"),
       posexplode(col("keys")).as(Seq("table", "bucket")))
     val cand = banded.as("c").join(
-        Par.maybeBroadcast(CacheScope.trackEager(qprobes).as("q")),
+        Par.maybeBroadcast(qprobes.as("q")),
         col("c.table") === col("q.table") && col("c.bucket") === col("q.bucket") &&
           col("c.vec_id") =!= col("q.query_id"))
       .select(col("q.query_id"), col("c.vec_id").as("neighbor_id"))
@@ -344,7 +340,7 @@ object Similarity {
 
   private def rpLsh(embeddings: DataFrame, queryPred: Column, k: Int,
       dims: Int, multiProbe: Boolean): DataFrame = {
-    val corpus = CacheScope.trackEager(withNorm2(embeddings)
+    val corpus = CacheScope.track(withNorm2(embeddings)
       .withColumn("bucket", lshBucket(col("embedding"), dims)))
     val queries = corpus.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -354,9 +350,8 @@ object Similarity {
         col("qbucket") +: (0 until LshBits).map(h =>
           col("qbucket").bitwiseXOR(lit(1 << h))): _*)
       else array(col("qbucket"))
-    val probes = CacheScope.trackEager(
-      queries.select(col("query_id"), col("qe"), col("qn2"),
-        explode(probeCols).as("pbucket")))
+    val probes = queries.select(col("query_id"), col("qe"), col("qn2"),
+      explode(probeCols).as("pbucket"))
     val scored = corpus.join(Par.maybeBroadcast(probes),
         col("bucket") === col("pbucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -433,7 +428,8 @@ object Similarity {
   def nearDupCandidates(embeddings: DataFrame, threshold: Double,
       dims: Int = 64): DataFrame = {
     val (rowsPerBand, bands) = lshParams(threshold)
-    val e = CacheScope.trackEager(withNorm2(embeddings)
+    // filled now: the band joins and both vector gates scan it
+    val e = Par.measured(withNorm2(embeddings)
       .select(col("vec_id"), col("embedding"), col("n2"),
         graft.functions.VectorExprs.signBandKeys(
           col("embedding"), dims, rowsPerBand, bands).as("keys")))
@@ -467,7 +463,8 @@ object Similarity {
   def rangeSearch(embeddings: DataFrame, queryPred: Column, threshold: Double,
       dims: Int = 64): DataFrame = {
     val (rowsPerBand, bands) = lshParams(threshold)
-    val e = CacheScope.trackEager(withNorm2(embeddings)
+    // filled now: the band joins and both vector gates scan it
+    val e = Par.measured(withNorm2(embeddings)
       .select(col("vec_id"), col("embedding"), col("n2"),
         graft.functions.VectorExprs.signBandKeys(
           col("embedding"), dims, rowsPerBand, bands).as("keys")))
@@ -622,12 +619,10 @@ object Similarity {
       element_at(element_at(col("dt"), si + 1),
         element_at(col("codes"), si + 1) + 1)
     }.reduce(_ + _)
-    // eager-tracked: qArr is Q rows of ~8 KB but sits under two collect_list
-    // aggregations whose plan-time estimate is garbage — the gate must read
-    // the materialized size (a decline here degrades the non-equi join to a
-    // cartesian strategy)
+    // qArr is Q rows of ~8 KB (a decline here degrades the non-equi join to
+    // a cartesian strategy)
     val scored = pqCodes(embeddings, subspaces, codes)
-      .join(Par.maybeBroadcast(CacheScope.trackEager(qArr)),
+      .join(Par.maybeBroadcast(qArr),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), adc.as("adc"))
     val rw = org.apache.spark.sql.expressions.Window
@@ -732,7 +727,8 @@ object Similarity {
     val corpus = CacheScope.track(withNorm2(embeddings))
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
-    val resid = CacheScope.trackEager(residualized(corpus, centroids))
+    // filled now: every codebook subspace and the encoder scan it
+    val resid = Par.measured(residualized(corpus, centroids))
     encodeResiduals(resid, residualCodebook(resid, subspaces, codes), subspaces)
   }
 
@@ -761,7 +757,8 @@ object Similarity {
     // once instead of re-deriving per join
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
-    val resid = CacheScope.trackEager(residualized(corpus, centroids))
+    // filled now: every codebook subspace and the encoder scan it
+    val resid = Par.measured(residualized(corpus, centroids))
     val cb = CacheScope.track(residualCodebook(resid, subspaces, codes))
     val ccodes = encodeResiduals(resid, cb, subspaces)
     val queries = corpus.filter(queryPred)
@@ -833,10 +830,7 @@ object Similarity {
       element_at(element_at(col("dt"), si + 1),
         element_at(col("codes"), si + 1) + 1)
     }.reduce(_ + _)
-    // eager-tracked for the same reason as pqAdcTopK's qArr: the plan-time
-    // size estimate under two collect_list aggs is garbage and the gate
-    // must read the materialized size
-    val probeTab = Par.maybeBroadcast(CacheScope.trackEager(qArr))
+    val probeTab = Par.maybeBroadcast(qArr)
     val scored = ccodes.as("cc").join(probeTab.as("q"),
         col("cc.cell") === col("q.cell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), adc.as("adc"))
@@ -855,8 +849,8 @@ object Similarity {
     * ceiling; this operator is that composition as a query.
     *
     * Scale shape: the shortlist is |Q|·`shortlist` rows — it joins the
-    * query vectors (|Q|-bounded) and is then eager-tracked and broadcast
-    * into ONE id equi-join against the corpus (the only corpus-scale touch;
+    * query vectors (|Q|-bounded) and is then broadcast through the size
+    * gate into ONE id equi-join against the corpus (the only corpus-scale touch;
     * at |Q| beyond the broadcast gate it degrades to a partitioned
     * shuffle-hash join on vec_id, still linear); the final top-k window
     * sorts |Q|·`shortlist` rows, never the corpus. */
@@ -870,11 +864,8 @@ object Similarity {
     val q = e.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("n2").as("qn2"))
-    // shortlist + query vectors: bounded by |Q|·shortlist, but under a
-    // window + joins where the size estimate is garbage — eager-track so
-    // the broadcast gate reads the materialized size
-    val slq = CacheScope.trackEager(
-      sl.select(col("query_id"), col("neighbor_id")).join(q, "query_id"))
+    // shortlist + query vectors: bounded by |Q|·shortlist
+    val slq = sl.select(col("query_id"), col("neighbor_id")).join(q, "query_id")
     val n = e.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ne"), col("n2").as("nn2"))
     val cos = cosineWithNorms(col("qe"), col("ne"), col("qn2"), col("nn2"))
@@ -916,7 +907,8 @@ object Similarity {
     val corpus = CacheScope.track(withNorm2(embeddings))
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
-    val resid = CacheScope.trackEager(residualized(corpus, centroids))
+    // filled now: every codebook subspace and the encoder scan it
+    val resid = Par.measured(residualized(corpus, centroids))
     val cb = CacheScope.track(residualCodebook(resid, subspaces, codes))
     val ccodes = encodeResiduals(resid, cb, subspaces)
       .join(corpus.select(col("vec_id"), col("embedding"), col("n2")),
@@ -1029,7 +1021,7 @@ object Similarity {
       // partitionBy write has no schema/partition dirs and would brick
       // every later readAnnIndex. isEmpty short-circuits on one live row.
       require(!live.isEmpty,
-        s"compaction would empty $dir/codes — a full-corpus takedown " +
+        s"compaction would empty $dir/codes - a full-corpus takedown " +
           "should delete the index directory, not compact it; tombstones " +
           "left intact")
       live.repartition(col("cell")).write.mode("overwrite")
@@ -1083,7 +1075,7 @@ object Similarity {
     val vectors = readAnnIndex(s, dir).codes
       .select(col("vec_id"), col("embedding"))
     require(!vectors.isEmpty,
-      s"retrain over an empty index $dir — a fully-tombstoned index " +
+      s"retrain over an empty index $dir - a fully-tombstoned index " +
         "should be deleted, not retrained; nothing mutated")
     // the rebuilt index lands in a SIBLING directory and the WHOLE index
     // swaps as one unit (self-review r13): four per-table swaps could
@@ -1146,7 +1138,7 @@ object Similarity {
   private def appendAnnIndexLocked(dir: String, newVectors: DataFrame): Unit = {
     val s = newVectors.sparkSession
     val idx = readAnnIndex(s, dir)
-    val batch = CacheScope.trackEager(withNorm2(newVectors))
+    val batch = CacheScope.track(withNorm2(newVectors))
     // idempotence guard: ids already in the index are skipped, so a
     // retried append (the parquet commit landed, the job died before
     // acking) cannot write duplicate vec_id rows that would occupy two
@@ -1210,14 +1202,13 @@ object Similarity {
     val q = CacheScope.track(withNorm2(queries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("n2").as("qn2")))
-    // the Q×nprobe cell ranking is computed ONCE (eager-cached): its
-    // collected cell set drives the static partition filter, and the same
-    // cached frame feeds ivfPqProbe's candidate join — not a second
-    // ranking-window execution in the same plan
+    // the Q×nprobe cell ranking is computed ONCE (cached; the cell collect
+    // below fills it): its collected cell set drives the static partition
+    // filter, and the same cached frame feeds ivfPqProbe's candidate join —
+    // not a second ranking-window execution in the same plan
     val ranked =
       if (pruneScan)
-        Some(CacheScope.trackEager(
-          rankedProbeCells(index.centroids, q, nprobe)))
+        Some(CacheScope.track(rankedProbeCells(index.centroids, q, nprobe)))
       else None
     val codes0 = ranked match {
       case Some(r) =>
@@ -1230,8 +1221,7 @@ object Similarity {
     }
     val sl = ivfPqProbe(index.centroids, index.codebook, codes0, q,
       shortlist, nprobe, index.subspaces, rankedOverride = ranked)
-    val slq = CacheScope.trackEager(
-      sl.select(col("query_id"), col("neighbor_id")).join(q, "query_id"))
+    val slq = sl.select(col("query_id"), col("neighbor_id")).join(q, "query_id")
     val n = codes0.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ne"), col("n2").as("nn2"))
     val cos = cosineWithNorms(col("qe"), col("ne"), col("qn2"), col("nn2"))
@@ -1512,9 +1502,9 @@ object Similarity {
     * stage of [[semanticDedup]], cell-local by the equi-join on `cell`. */
   private def withinCellPairs(corpus: DataFrame, centroids: DataFrame,
       threshold: Double): DataFrame = {
-    val e = CacheScope.trackEager(
+    val e = CacheScope.track(
       corpus.join(assignCells(corpus, centroids), "vec_id"))
-    e.as("l").join(Par.maybeBroadcast(e.as("r")),
+    e.as("l").join(Par.maybeBroadcast(e).as("r"),
         col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
       .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"),
         cosineWithNorms(col("l.embedding"), col("r.embedding"),
@@ -1604,10 +1594,8 @@ object Similarity {
       .filter(col("cum_prev") <
         floor(lit(dropFrac) * col("n_cell").cast("double")).cast("long"))
       .groupBy(col("cell")).agg(min(col("qb")).as("thr_qb"))
-    // thr is codebook-bounded (<= |cells| rows) but sits under a window +
-    // two aggregations, where the plan-time size estimate is garbage —
-    // eager-track so the broadcast gate reads the materialized size
-    scored.join(Par.maybeBroadcast(CacheScope.trackEager(thr)), Seq("cell"), "left")
+    // thr is codebook-bounded (<= |cells| rows)
+    scored.join(Par.maybeBroadcast(thr), Seq("cell"), "left")
       .select(col("vec_id"), col("cell"), col("proto"),
         (col("qb") < coalesce(col("thr_qb"), lit(Long.MaxValue))).as("kept"))
   }
@@ -1630,13 +1618,13 @@ object Similarity {
       dropFrac: Double = 0.3, lloydIters: Int = 2,
       maxCells: Int = IvfMaxCells): DataFrame = {
     // norm + cache the corpus ONCE (judge r6 #7): the dedup cell chain, the
-    // LSH tier, and the survivor recluster all consume this one eager-cached
+    // LSH tier, and the survivor recluster all consume this one cached
     // scan (withNorm2 passes a normed frame through), instead of each
     // re-deriving cast+norm from the parquet source. The two Lloyd chains
     // themselves stay separate BY DESIGN — they fold different member sets
     // (full corpus vs canonical survivors), so their codebooks differ and
     // cannot be shared without changing the pipeline's semantics.
-    val normed = CacheScope.trackEager(withNorm2(embeddings))
+    val normed = CacheScope.track(withNorm2(embeddings))
     val sem = CacheScope.track(
       semanticDedupFull(normed, threshold, lloydIters, maxCells))
     val survivors = normed.join(

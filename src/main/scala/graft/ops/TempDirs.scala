@@ -134,7 +134,7 @@ object TempDirs {
     // exists; evidence means it doesn't.
     if (!fs.exists(dest) && fs.exists(aside))
       throw new IllegalStateException(
-        s"$dest is missing while $aside exists — a previous swap crashed " +
+        s"$dest is missing while $aside exists - a previous swap crashed " +
           s"mid-rename; restore $aside to $dest before retrying")
     if (fs.exists(aside))
       require(fs.delete(aside, true),
@@ -152,7 +152,7 @@ object TempDirs {
         if (restored)
           s"swap: could not move $tmp into $dest; original restored"
         else s"swap: could not move $tmp into $dest AND the restore " +
-          s"failed — the live data is at $aside; move it back to $dest " +
+          s"failed - the live data is at $aside; move it back to $dest " +
           "before retrying")
     }
     require(fs.delete(aside, true),

@@ -820,18 +820,17 @@ object TextAnalysis {
       s"seed classes overlap: ${goodSources.intersect(badSources)}")
     val occ = CacheScope.track(docs.select(col("doc_id"), col("source"),
       posexplode(tokenizer.tokens(col("text"))).as(Seq("p", "tok"))))
-    val counts = occ
+    // read twice (the scored join and tot), so cached
+    val counts = CacheScope.track(occ
       .filter(col("source").isin(goodSources ++ badSources: _*))
       .select(col("tok"),
         when(col("source").isin(goodSources: _*), 1L).otherwise(0L).as("g"))
       .groupBy(col("tok"))
-      .agg(sum(col("g")).as("cg"), sum(lit(1L) - col("g")).as("cb"))
+      .agg(sum(col("g")).as("cg"), sum(lit(1L) - col("g")).as("cb")))
     val tot = counts.agg(sum(col("cg")).as("tcg"), sum(col("cb")).as("tcb"))
     val prior = (col("tcg") + 1).cast("double") / (col("tcg") + col("tcb") + 2)
-    // eager: the post-aggregation size estimate is garbage (input-derived)
-    // and would decline the broadcast of a genuinely vocab-bounded table
     val scored = occ
-      .join(Par.maybeBroadcast(CacheScope.trackEager(counts)), Seq("tok"), "left")
+      .join(Par.maybeBroadcast(counts), Seq("tok"), "left")
       .crossJoin(broadcast(tot))
       .select(col("doc_id"), col("p"),
         (coalesce((col("cg") + 1).cast("double") / (col("cg") + col("cb") + 2),
@@ -1068,7 +1067,7 @@ object TextAnalysis {
       val missing = observed -- targetShares.keySet
       require(missing.isEmpty,
         s"targetShares covers no share for observed sources: " +
-          s"${missing.toSeq.sorted.mkString(", ")} — assign them explicitly " +
+          s"${missing.toSeq.sorted.mkString(", ")} - assign them explicitly " +
           "(a missing source would otherwise be dropped entirely)")
     }
     val bySource = perDoc.groupBy(col("source"))
@@ -1091,11 +1090,9 @@ object TextAnalysis {
             share * col("total_tokens").cast("double") / col("src_tokens")))
           .as("rate"))
     val lane = md5Lane(concat(lit("mix:"), col("doc_id").cast("string")))
-    // rates is |sources|-bounded but sits under an aggregation + cross join
-    // where the plan-time size estimate is garbage — eager-track so the
-    // broadcast gate reads the materialized size (a declined broadcast here
-    // shuffles the corpus stream into ≤ |sources| partitions)
-    perDoc.join(Par.maybeBroadcast(CacheScope.trackEager(rates)), "source")
+    // rates is |sources|-bounded (a declined broadcast here shuffles the
+    // corpus stream into ≤ |sources| partitions)
+    perDoc.join(Par.maybeBroadcast(rates), "source")
       .select(col("doc_id"), col("source"), col("n_tokens"), col("rate"),
         (lane % 1000000L < floor(col("rate") * 1000000L).cast("long"))
           .as("kept"))
@@ -1127,8 +1124,7 @@ object TextAnalysis {
       tokenizer: Tokenizer = Tokenizer.Whitespace): DataFrame = {
     val (perDoc, rates) = temperatureRates(docs, tokenizer, cap = 1.0)
     val lane = md5Lane(concat(lit("tmix:"), col("doc_id").cast("string")))
-    // same |sources|-bounded-rates eager-track as [[mixToShares]]
-    perDoc.join(Par.maybeBroadcast(CacheScope.trackEager(rates)), "source")
+    perDoc.join(Par.maybeBroadcast(rates), "source")
       .select(col("doc_id"), col("source"), col("n_tokens"), col("rate"),
         (lane % 1000000L < floor(col("rate") * 1000000L).cast("long"))
           .as("kept"))
@@ -1186,7 +1182,7 @@ object TextAnalysis {
     * up-weighting.
     *
     * Scale shape: identical to [[mixTemperature]] — one map-side-combining
-    * token groupBy, a bounded eager-tracked broadcast rate table, then a
+    * token groupBy, a bounded gated broadcast rate table, then a
     * pure projection + `explode(sequence)` whose output volume is the
     * schedule itself (now bounded by maxEpochs · |corpus|). */
   def mixTemperatureEpochs(docs: DataFrame,
@@ -1195,7 +1191,7 @@ object TextAnalysis {
     require(maxEpochs >= 1, s"maxEpochs >= 1: $maxEpochs")
     val (perDoc, rates) = temperatureRates(docs, tokenizer, cap = maxEpochs.toDouble)
     val lane = md5Lane(concat(lit("epoch:"), col("doc_id").cast("string")))
-    perDoc.join(Par.maybeBroadcast(CacheScope.trackEager(rates)), "source")
+    perDoc.join(Par.maybeBroadcast(rates), "source")
       .select(col("doc_id"), col("source"), col("n_tokens"), col("rate"),
         (floor(col("rate")).cast("long") +
           when(lane % 1000000L <
@@ -1249,12 +1245,9 @@ object TextAnalysis {
       .filter(col("cum_prev") <
         floor(lit(keepFrac) * col("n_src").cast("double")).cast("long"))
       .groupBy(col("source")).agg(min(col("qb")).as("thr_qb"))
-    // thr sits under a window + two aggregations, where Catalyst's size
-    // estimate is garbage (see CacheScope.trackEager) — without the eager
-    // materialization the broadcast gate silently declines and the join
-    // falls back to a shuffle keyed on low-cardinality `source`, i.e. the
-    // corpus-scale scored stream collapses into ≤ |sources| partitions.
-    scored.join(Par.maybeBroadcast(CacheScope.trackEager(thr)),
+    // thr is |sources|-bounded: a declined broadcast would shuffle the
+    // corpus-scale scored stream into ≤ |sources| partitions
+    scored.join(Par.maybeBroadcast(thr),
         Seq("source"), "left")
       .select(col("doc_id"), col("source"), col("quality"),
         (col("qb") >= coalesce(col("thr_qb"), lit(Long.MaxValue))).as("kept"))
@@ -1290,7 +1283,7 @@ object TextAnalysis {
     * Scale shape: this is why DSIR hashes — the model is a BOUNDED m-row
     * bucket table regardless of corpus size: one map-side-combining groupBy
     * with conditional sums builds target and raw counts in a single pass
-    * (no per-subset scan or self-join), the ratio table is eager-tracked
+    * (no per-subset scan or self-join), the ratio table is measured
     * and broadcast back over the feature stream, and the per-doc product
     * is the [[lmScore]] fixed-order fold, buffer bounded by doc length. */
   def dsirWeights(docs: DataFrame, targetPred: Column, m: Int = 4096,
@@ -1311,7 +1304,7 @@ object TextAnalysis {
         ((col("tb") + 1L).cast("double") * (col("rt") + m).cast("double") /
           ((col("rb") + 1L).cast("double") * (col("tt") + m).cast("double")))
           .as("r"))
-    val agg = occ.join(Par.maybeBroadcast(CacheScope.trackEager(ratios)), "b")
+    val agg = occ.join(Par.maybeBroadcast(ratios), "b")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("p"), col("r")))).as("ps"))
       .select(col("doc_id"),
@@ -1366,15 +1359,15 @@ object TextAnalysis {
       maxDistinctWords: Long = 50L * 1000 * 1000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // the one corpus-scale pass; trackEager materializes it so the
-    // distinct-word gate below reads a cached count, not a second scan
-    val words = CacheScope.trackEager(docs
+    // the one corpus-scale pass, cached: the distinct-word gate's count
+    // fills it and the collect below reads it, not a second scan
+    val words = CacheScope.track(docs
       .select(explode(tokenizer.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     val nWords = words.count()
     require(nWords <= maxDistinctWords,
       s"bpeMerges: $nWords distinct words exceeds maxDistinctWords " +
-        s"($maxDistinctWords) — the merge loop collects the word table; " +
+        s"($maxDistinctWords) - the merge loop collects the word table; " +
         "pre-filter the corpus (minimum word frequency) or raise the gate")
     val table = words.collect().map(r => (r.getString(0), r.getLong(1)))
     spark.createDataset(localBpeMerges(table, merges))
@@ -1672,7 +1665,7 @@ object TextAnalysis {
     * Scale shape: the tertile cut is the [[qualityTopFrac]] quantized
     * histogram — per-(source, bucket) counts (map-side combining), a
     * cumulative window over the BOUNDED histogram (≤ |sources|·buckets
-    * rows), and two bounded threshold tables eager-tracked and broadcast
+    * rows), and two bounded threshold tables measured and broadcast
     * back over the corpus-scale scored stream (never a per-source
     * full-partition rank sort, and never a shuffle keyed on low-cardinality
     * `source`). Cut decisions are made per whole bucket at 1e-6
@@ -1700,10 +1693,7 @@ object TextAnalysis {
       .groupBy(col("source")).agg(min(col("qb")).as(out))
     val thr = thrAt(col("n_src") / 3.0, "thr_head")
       .join(thrAt(col("n_src") * 2.0 / 3.0, "thr_mid"), Seq("source"), "full")
-    // same trap as qualityTopFrac: thr sits under windows + aggregations
-    // where the size estimate is garbage — eager-track or the broadcast
-    // gate declines into a |sources|-partition shuffle of the corpus.
-    scored.join(Par.maybeBroadcast(CacheScope.trackEager(thr)),
+    scored.join(Par.maybeBroadcast(thr),
         Seq("source"), "left")
       .select(col("doc_id"), col("source"), col("lm_score"),
         when(col("qb") >= coalesce(col("thr_head"), lit(Long.MaxValue)),
@@ -1727,7 +1717,7 @@ object TextAnalysis {
     * combining), a cumulative window over the BOUNDED histogram classifies
     * each bucket as fully-kept (`cum_prev + cnt <= cap`), fully-dropped
     * (`cum_prev >= cap`) or the ONE boundary bucket per source, and the
-    * bounded status table is eager-tracked and broadcast back over the
+    * bounded status table is measured and broadcast back over the
     * scored stream. Only boundary-bucket rows — at most one quality bucket
     * per source — pay a `row_number` sort, so the exact cap semantics cost a
     * per-bucket (not per-source) window over a sliver of the corpus. Bucket
@@ -1755,11 +1745,8 @@ object TextAnalysis {
         (col("cum_prev") < cap && col("cum_prev") + col("cnt") > cap)
           .as("boundary"),
         (lit(cap.toLong) - col("cum_prev")).as("room"))
-    // same trap as qualityTopFrac: status sits under a window + aggregation
-    // where the size estimate is garbage — eager-track or the broadcast gate
-    // declines into a |sources|-partition shuffle of the corpus
     val joined = CacheScope.track(
-      scored.join(Par.maybeBroadcast(CacheScope.trackEager(status)),
+      scored.join(Par.maybeBroadcast(status),
         Seq("source", "qb")))
     val plain = joined.filter(!col("boundary"))
       .select(col("doc_id"), col("source"), col("quality"),
@@ -1787,7 +1774,7 @@ object TextAnalysis {
     * (`cum_prev + tok <= budget`; every doc's preceding total is under
     * budget), fully dropped (`cum_prev >= budget`), or the single boundary
     * bucket, whose rows alone pay an ordered running-sum window. The status
-    * table is eager-tracked and broadcast over the scored stream, so the
+    * table is measured and broadcast over the scored stream, so the
     * global greedy semantics cost one bounded-table scan plus a one-bucket
     * window. */
   def selectBudget(docs: DataFrame, budget: Long = 10000L,
@@ -1818,7 +1805,7 @@ object TextAnalysis {
           .as("boundary"),
         col("cum_prev"))
     val joined = CacheScope.track(
-      scored.join(Par.maybeBroadcast(CacheScope.trackEager(status)),
+      scored.join(Par.maybeBroadcast(status),
         Seq("qb")))
     val plain = joined.filter(!col("boundary"))
       .select(col("doc_id"), col("quality"), col("n_tokens"),

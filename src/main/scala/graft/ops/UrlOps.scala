@@ -143,7 +143,7 @@ object UrlOps {
     * the physical plan: two parquet scans). */
   def domains(pages: DataFrame): DataFrame = {
     val u = parseNormalize(col("url"))
-    val per = CacheScope.trackEager(pages.select(
+    val per = CacheScope.track(pages.select(
         u.getField("registered_domain").as("registered_domain"),
         when(col("text") === "", 0)
           .otherwise(size(split(col("text"), " "))).cast("long").as("ntok"))
@@ -353,7 +353,7 @@ object UrlOps {
       parseNormalize(col("canonical")).as("__t"))
     val tgtOk = col("canonical").isNotNull &&
       col("__t").getField("scheme") =!= "" && col("__t").getField("host") =!= ""
-    val base = CacheScope.trackEager(parsed.select(col("doc_id"),
+    val base = CacheScope.track(parsed.select(col("doc_id"),
       col("__self").as("self_norm"),
       when(!tgtOk, lit(null).cast("string"))
         .otherwise(col("__t").getField("url_norm")).as("tgt_norm")))

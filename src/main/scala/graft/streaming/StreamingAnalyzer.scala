@@ -383,7 +383,7 @@ object StreamingAnalyzer {
     val marker = new org.apache.hadoop.fs.Path(commits, id.toString)
     if (fs.exists(marker)) {
       System.err.println(s"[graft] batch $id replayed with sink writes " +
-        "already committed — skipping (crash landed between sink writes " +
+        "already committed - skipping (crash landed between sink writes " +
         "and the offset commit)")
       false
     } else {

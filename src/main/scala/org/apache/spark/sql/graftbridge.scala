@@ -18,9 +18,24 @@ object graftbridge {
     s.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
   /** Catalyst's optimizer-time size estimate for a frame — available without
-    * running a job (statistics propagation over the optimized logical plan). */
-  def planSizeBytes(df: DataFrame): BigInt =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan.stats.sizeInBytes
+    * running a job. Optimized afresh, so a cache filled since the frame was
+    * first planned reports the size of its blocks. */
+  def planSizeBytes(df: DataFrame): BigInt = {
+    val d = df.asInstanceOf[classic.Dataset[_]]
+    d.sparkSession.sessionState.executePlan(d.logicalPlan).optimizedPlan.stats.sizeInBytes
+  }
+
+  /** Whether [[planSizeBytes]] is a measured size: the plan reads only
+    * filled caches and local rows, through projections and filters. */
+  def sizeIsMeasured(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
+    val d = df.asInstanceOf[classic.Dataset[_]]
+    !d.sparkSession.sessionState.executePlan(d.logicalPlan).optimizedPlan.exists {
+      case r: execution.columnar.InMemoryRelation => !r.cacheBuilder.isCachedColumnBuffersLoaded
+      case _: LocalRelation | _: Project | _: Filter => false
+      case _ => true
+    }
+  }
 
   /** Rendered physical plan (test/diagnostic hook). */
   def executedPlanString(df: DataFrame): String =

@@ -90,6 +90,47 @@ class OpsSpec extends SparkSpec {
     graft.ops.CacheScope.releaseAll(spark)
   }
 
+  test("the broadcast gate measures a declined estimate and decides on the measured size") {
+    import graft.ops.{CacheScope, Par}
+    import org.apache.spark.sql.graftbridge
+    CacheScope.releaseAll(spark)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val (oldThr, oldAqe) = (spark.conf.get(key), spark.conf.get("spark.sql.adaptive.enabled"))
+    // a join's estimate is the product of its sides: ~64 MB for 1 000 rows
+    // that cache in a few KB
+    def small(n: Int) = spark.range(0, n).join(spark.range(0, n), "id")
+    val big = spark.range(0, 200000).select(col("id"), (col("id") % 7).as("v"))
+    // the gated join is the plan's first join node (a cached side's own
+    // plan, printed below it, may hold joins of its own)
+    def plan(side: org.apache.spark.sql.DataFrame) =
+      graftbridge.executedPlanString(big.join(Par.maybeBroadcast(side), "id"))
+        .linesIterator.find(_.contains("Join")).getOrElse("")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false") // the static plan
+      spark.conf.set(key, (1L << 20).toString)
+      assert(graftbridge.planSizeBytes(small(1000)) > (1L << 20))
+      val fits = plan(small(1000))
+      assert(fits.contains("BroadcastHashJoin"), fits)
+      assert(CacheScope.trackedCount(spark) > 0, "the measured side is tracked")
+      spark.conf.set(key, "1024")
+      val over = plan(small(1000))
+      assert(over.contains("ShuffledHashJoin"), over)
+      assert(!over.contains("BroadcastHashJoin"), over)
+      // threshold off: neither measured nor hinted
+      spark.conf.set(key, "-1")
+      val tracked = CacheScope.trackedCount(spark)
+      val off = plan(small(999))
+      assert(!off.contains("BroadcastHashJoin"), off)
+      assert(!off.contains("ShuffledHashJoin"), off)
+      assert(CacheScope.trackedCount(spark) == tracked)
+    } finally {
+      spark.conf.set(key, oldThr)
+      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
+    }
+    CacheScope.releaseAll(spark)
+    assert(CacheScope.trackedCount(spark) == 0)
+  }
+
   test("BPE-ish tokenizer finds the punctuation-glued near-dup whitespace misses") {
     import graft.ops.Tokenizer
     // same 20 words; doc 1 glues every word pair with a comma — under

@@ -17,12 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * pressure (judge r2 finding: un-unpersisted persists are a leak in a real
  * service).
  *
- * Three flavors, picked per call site: [[track]] (lazy persist, for a
- * frame with more than one reader), [[barrier]] and [[barrierLazy]]
- * (lineage cut, eager or fused into the caller's next action). A frame
- * that needs filling now (a size decision, or several scans in one plan)
- * goes through [[Par.measured]], which tracks it and fills it with one job.
- * Every lineage cut is a `localCheckpoint`: its
+ * Four flavors, picked per call site: [[track]] (lazy persist, for a
+ * frame with more than one reader), [[fill]] (persist filled now with one
+ * job, for a size decision or a frame several branches of one plan scan),
+ * [[barrier]] and [[barrierLazy]] (lineage cut, eager or fused into the
+ * caller's next action). Every lineage cut is a `localCheckpoint`: its
  * blocks live on the executors, so losing an executor fails the query that
  * reads the cut. Durability is the caller's; the streaming analyzer's comes
  * from the query's own checkpointed offsets and state plus replay.
@@ -67,13 +66,26 @@ object CacheScope {
     df
   }
 
+  /** [[track]] `df` and fill it with one `count()` job: its size estimate
+    * is then the size of its cached blocks ([[Par.maybeBroadcast]]'s
+    * measurement). Operators also fill a frame that several branches of
+    * one plan scan (band and chunk self-joins, per-subspace codebooks): AQE
+    * runs one materialization job per scan of a cache that is still empty
+    * when the query starts. A frame the caller already persisted is filled
+    * but not registered: its blocks stay the caller's to release. */
+  def fill(df: DataFrame): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) track(df)
+    df.count()
+    df
+  }
+
   private val trackedRdds =
     new ConcurrentHashMap[SparkSession,
       ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]]()
 
   /** Materialize `df` NOW and TRUNCATE its lineage (`localCheckpoint`):
     * the returned frame's logical plan is a leaf over the materialized
-    * blocks. A filled cache ([[Par.measured]]) leaves the original plan in
+    * blocks. A filled cache ([[fill]]) leaves the original plan in
     * place — every Dataset built DOWNSTREAM still re-ANALYZES the full
     * lineage, which for the composed crawl recipes (rendered-fixture URL →
     * parse → render → extract expression trees) is a scale-INDEPENDENT

@@ -292,7 +292,7 @@ object Dedup {
     // bounded and the candidate stream is orders of magnitude larger than the
     // doc table, so fusing wins on both counts. Filled now: every band
     // branch scans it.
-    val banded = Par.measured(bandedWithSets(docs, k, bands, tokenizer))
+    val banded = CacheScope.fill(bandedWithSets(docs, k, bands, tokenizer))
     val build = maybeBroadcast(banded)
     val inter = graft.functions.ArrayExprs.sortedIntersectSize(
       col("l.tks"), col("r.tks"))
@@ -347,7 +347,7 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         md5(col("text").cast("binary")).as("dig"))
     // grpSrc and repDocs each feed several branches: filled now
-    val grpSrc = Par.measured(keyed
+    val grpSrc = CacheScope.fill(keyed
       .groupBy(col("dig"), col("source")).agg(count(lit(1)).as("cnt")))
     // (a) within-digest pairs, closed form on the bounded (dig, source) table
     val sameSrc = grpSrc.filter(col("cnt") > 1)
@@ -360,7 +360,7 @@ object Dedup {
         (col("l.cnt") * col("r.cnt")).as("n"))
     // (b) sketch on one representative per digest; expand by count products
     val reps = keyed.groupBy(col("dig")).agg(min(col("doc_id")).as("doc_id"))
-    val repDocs = Par.measured(reps
+    val repDocs = CacheScope.fill(reps
       .join(docs.select(col("doc_id"), col("text")), "doc_id"))
     val repDig = maybeBroadcast(repDocs.select(col("doc_id"), col("dig")))
     val grpB = maybeBroadcast(grpSrc)
@@ -424,7 +424,7 @@ object Dedup {
       shiftright(col("simhash"), c * bitsPer).bitwiseAND(lit(mask)).as(s"c$c")
     }
     // filled now: every chunk branch scans it
-    val fps = Par.measured(
+    val fps = CacheScope.fill(
       simhash(docs).select(col("doc_id") +: col("simhash") +: chunkCols: _*))
     val build = maybeBroadcast(fps)
     (0 until nChunks).map { c =>
@@ -546,9 +546,9 @@ object Dedup {
     val induced =
       if (pairsInduced) pairs.select(col("a"), col("b"))
       else pairs.select(col("a"), col("b"))
-        .join(Par.maybeBroadcast(ids.withColumnRenamed("doc_id", "a")),
+        .join(Par.maybeBroadcast(ids.withColumnRenamed("doc_id", "a"), bounded = false),
           Seq("a"), "left_semi")
-        .join(Par.maybeBroadcast(ids.withColumnRenamed("doc_id", "b")),
+        .join(Par.maybeBroadcast(ids.withColumnRenamed("doc_id", "b"), bounded = false),
           Seq("b"), "left_semi")
         .select(col("a"), col("b"))
     val p = induced.localCheckpoint()
@@ -782,9 +782,9 @@ object Dedup {
     val texts = docs.select(col("doc_id"), col("text"))
     cand
       .join(maybeBroadcast(
-        texts.select(col("doc_id").as("a"), col("text").as("__ta"))), "a")
+        texts.select(col("doc_id").as("a"), col("text").as("__ta")), bounded = false), "a")
       .join(maybeBroadcast(
-        texts.select(col("doc_id").as("b"), col("text").as("__tb"))), "b")
+        texts.select(col("doc_id").as("b"), col("text").as("__tb")), bounded = false), "b")
       .select(col("a"), col("b"),
         levenshtein(col("__ta"), col("__tb")).as("edit_dist"),
         greatest(length(col("__ta")), length(col("__tb"))).as("__len"))
@@ -1548,7 +1548,7 @@ object Dedup {
       // the verify-side choice below read its ACTUAL cached size: Catalyst's
       // estimate for the aggregated sketch subtree is pessimistic by orders
       // of magnitude
-      val heSpread = Par.spread(Par.measured(heRep))
+      val heSpread = Par.spread(CacheScope.fill(heRep))
       val hband = heSpread.select(col("hid"), posexplode(col("keys")).as(Seq("band", "key")))
       val bband = bSk.select(col("doc_id"), posexplode(col("keys")).as(Seq("band", "key")))
       val cand = hband.join(maybeBroadcast(bband), Seq("band", "key"))
@@ -1565,15 +1565,17 @@ object Dedup {
       // declined the candidate broadcast and re-exchanged the whole
       // 148 MB candidate stream to hash-join a 3 MB history table. When
       // the slim history projection fits the threshold, broadcast IT —
-      // the candidate stream is never re-shuffled.
-      val heSlim = Par.sized(heSpread.select(col("hid"), col("ev").as("hev"),
-        col("n2").as("hn2")))
+      // the candidate stream is never re-shuffled. Neither side has a size
+      // bound, so neither gate fills it (heRep is filled above).
+      val heSlim = heSpread.select(col("hid"), col("ev").as("hev"),
+        col("n2").as("hn2"))
       val candB = cand
         .join(maybeBroadcast(
           bSk.select(col("doc_id"), col("ev").as("bev"), col("n2").as("bn2"))),
           "doc_id")
-      val embPerRep = (if (heSlim.fits) candB.join(broadcast(heSlim.df), "hid")
-        else maybeBroadcast(candB).join(heSlim.df, "hid"))
+      val embPerRep = (if (Par.fits(heSlim, bounded = false))
+          candB.join(broadcast(heSlim), "hid")
+        else maybeBroadcast(candB, bounded = false).join(heSlim, "hid"))
         .filter(graft.functions.VectorExprs.dotProduct(col("bev"), col("hev"))
           / sqrt(col("bn2") * col("hn2")) >= embThreshold)
         .groupBy(col("doc_id")).agg(min(col("hid")).as("emb_id"))
@@ -1621,7 +1623,7 @@ object Dedup {
       slice(t, lit(2), greatest(n - 1, lit(0))),
       (x, y) => concat(x, lit(" "), y))
     // filled now: the postings and both verify joins scan it
-    val sets = Par.measured(docs.select(col("doc_id"),
+    val sets = CacheScope.fill(docs.select(col("doc_id"),
       array_sort(array_distinct(transform(bigrams, b => tokHash(b)))).as("bgs")))
     val postings = sets.select(col("doc_id"), explode(col("bgs")).as("bg"))
     val rare = postings.groupBy(col("bg"))
@@ -1632,7 +1634,7 @@ object Dedup {
     // pairs then expand in place by double explode — no posting self-join.
     // The semi-join output is already hash-partitioned by bg, so the
     // collect_list aggregation reuses that partitioning (no extra exchange).
-    val buckets = postings.join(maybeBroadcast(rare), "bg")
+    val buckets = postings.join(maybeBroadcast(rare, bounded = false), "bg")
       .groupBy(col("bg"))
       .agg(collect_list(col("doc_id")).as("ds"))
     val candidates = buckets

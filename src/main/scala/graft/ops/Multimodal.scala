@@ -424,7 +424,7 @@ object Multimodal {
       shiftright(col("phash"), c * bitsPer).bitwiseAND(lit(mask)).as(s"c$c")
     }
     // filled now: every chunk branch scans it
-    val fps = Par.measured(
+    val fps = CacheScope.fill(
       phash(docs).select(col("doc_id") +: col("phash") +: chunkCols: _*))
     val build = maybeBroadcast(fps)
     (0 until nChunks).map { c =>

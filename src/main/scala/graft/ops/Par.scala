@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, graftbridge}
 import org.apache.spark.sql.functions.broadcast
-import org.apache.spark.storage.StorageLevel
 
 /** Partition-width and join-strategy guards shared by the operators. */
 object Par {
@@ -32,65 +31,48 @@ object Par {
 
   /**
    * The one broadcast rule, for the INTENDED-broadcast side of a join (a
-   * sketch, probe, rate or vector table). Threshold (`spark.sql.
-   * autoBroadcastJoinThreshold`) <= 0: no broadcast, no hint. Catalyst's
-   * free estimate fits: broadcast. Otherwise decide on the MEASURED size
-   * ([[measured]]; no job when the estimate already reads filled caches):
-   * broadcast when it fits, else hint a SHUFFLE-HASH build on this side.
+   * sketch, probe, rate or vector table). Catalyst's free estimate fits
+   * `spark.sql.autoBroadcastJoinThreshold`: broadcast. Otherwise decide on
+   * the MEASURED size ([[CacheScope.fill]]; no job when the plan already
+   * reads filled caches): broadcast when it fits, else hint a SHUFFLE-HASH
+   * build on this side. Threshold <= 0: the hint, with no measurement.
    *
-   * The estimate alone cannot decline: for aggregated and joined subtrees
-   * it is orders of magnitude high (sf0.01: 1.1e19 B over ~60k events). An
-   * unconditional `broadcast()` cannot stand in either: at corpus scale it
-   * is a driver OOM / 8 GB broadcast-limit failure. The fallback is
-   * `shuffle_hash`, not sort-merge, because the OTHER side is the unbounded
-   * stream: on the 100x stress corpus a declined 28 MB vector table put a
-   * ~500M-row candidate stream through sort spill until the disk filled;
-   * the hash build streams it with zero sort state. The hint follows a
-   * measured decline only, so it never pins an estimate's mistake past
-   * where AQE's runtime sizes could correct it. Each decision on a measured
-   * size logs one stderr line: calling site, job description (the query
-   * under graft.Verify), estimate, measured size, threshold and decision.
+   * The estimate alone cannot decline a bounded side: for aggregated and
+   * joined subtrees it is orders of magnitude high (sf0.01: 1.1e19 B over
+   * ~60k events). A side with NO size bound (`bounded = false`: corpus ids
+   * or text, corpus-wide gram sets, a candidate stream) declines on the
+   * estimate, since at corpus scale its fill would cache the query's
+   * largest intermediate. An unconditional `broadcast()` is a driver OOM at
+   * corpus scale. The fallback is `shuffle_hash`, not sort-merge, because
+   * the OTHER side is the unbounded stream: on the 100x stress corpus a
+   * declined 28 MB vector table put a ~500M-row candidate stream through
+   * sort spill until the disk filled. Each estimate over the threshold
+   * logs one stderr line: calling site, job description (the query under
+   * graft.Verify), estimate, measured size, threshold and decision.
    */
-  def maybeBroadcast(df: DataFrame): DataFrame = {
-    val s = sized(df)
-    if (s.fits) broadcast(s.df) else if (s.measured) s.df.hint("shuffle_hash") else s.df
-  }
-
-  /** The rule's verdict on a join side: the frame to join (the cached one
-    * once measured), whether it fits, and whether the size was measured. */
-  final case class Sized(df: DataFrame, fits: Boolean, measured: Boolean)
+  def maybeBroadcast(df: DataFrame, bounded: Boolean = true): DataFrame =
+    if (fits(df, bounded)) broadcast(df) else df.hint("shuffle_hash")
 
   /** [[maybeBroadcast]]'s decision without the hint, for a caller that
     * chooses WHICH side of a join to broadcast. */
-  def sized(df: DataFrame): Sized = {
+  def fits(df: DataFrame, bounded: Boolean = true): Boolean = {
     val threshold = graftbridge.autoBroadcastThreshold(df.sparkSession)
-    lazy val estimate = graftbridge.planSizeBytes(df)
-    if (threshold <= 0) Sized(df, fits = false, measured = false)
-    else if (estimate <= threshold) Sized(df, fits = true, measured = false)
+    lazy val (estimate, exact) = graftbridge.planSize(df)
+    if (threshold <= 0) false
+    else if (estimate <= threshold) true
     else {
-      val m = if (graftbridge.sizeIsMeasured(df)) df else measured(df)
-      val size = graftbridge.planSizeBytes(m)
+      val size = if (exact || !bounded) estimate
+        else graftbridge.planSize(CacheScope.fill(df), fresh = true)._1
       def inPar(f: StackTraceElement) = f.getClassName.takeWhile(_ != '$') == "graft.ops.Par"
       val site = Thread.currentThread.getStackTrace.dropWhile(!inPar(_)).find(!inPar(_))
         .fold("?")(f => s"${f.getFileName}:${f.getLineNumber}")
       val query = Option(df.sparkSession.sparkContext.getLocalProperty("spark.job.description"))
         .fold("")(d => s" in $d")
-      System.err.println(s"[graft] maybeBroadcast: measured at $site$query: estimate " +
-        s"$estimate B, measured $size B, threshold $threshold B -> " +
+      val sizeNote = if (bounded || exact) s"measured $size B" else "unbounded, not measured"
+      System.err.println(s"[graft] maybeBroadcast: at $site$query: estimate $estimate B, " +
+        s"$sizeNote, threshold $threshold B -> " +
         (if (size <= threshold) "broadcast" else "shuffle-hash"))
-      Sized(m, size <= threshold, measured = true)
+      size <= threshold
     }
-  }
-
-  /** Persist `df` (registered for [[CacheScope.releaseAll]] unless the
-    * session already caches it) and fill it with one `count()` job: its
-    * size estimate is then the size of its cached blocks. Operators also
-    * fill a frame that several branches of one plan scan (band and chunk
-    * self-joins, per-subspace codebooks): AQE runs one materialization job
-    * per scan of a cache that is still empty when the query starts. */
-  def measured(df: DataFrame): DataFrame = {
-    val t = if (df.storageLevel == StorageLevel.NONE) CacheScope.track(df) else df
-    t.count()
-    t
   }
 }

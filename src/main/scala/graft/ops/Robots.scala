@@ -870,10 +870,10 @@ object Robots {
       .filter(col("status").isin("added", "changed"))
       .select(col("text_hash"))
     val changedIds = Dedup.fingerprints(newDocs)
-      .join(Par.maybeBroadcast(moved), Seq("text_hash"), "left_semi")
+      .join(Par.maybeBroadcast(moved, bounded = false), Seq("text_hash"), "left_semi")
       .select(col("doc_id"))
     UrlOps.urls(UrlOps.pageUrls(docs))
-      .join(Par.maybeBroadcast(changedIds), Seq("doc_id"), "left_semi")
+      .join(Par.maybeBroadcast(changedIds, bounded = false), Seq("doc_id"), "left_semi")
       .select(col("registered_domain")).distinct()
   }
 
@@ -1321,12 +1321,12 @@ object Robots {
         gb.planSizeBytes(seen) > invertSeenFactor * thr
       val fresh =
         if (invert) {
-          val candE = Par.measured(cand)
-          val candNorms = Par.sized(candE.select(col("url_norm")))
-          if (candNorms.fits) {
+          val candE = CacheScope.fill(cand)
+          val candNorms = candE.select(col("url_norm"))
+          if (Par.fits(candNorms)) {
             // seen rows are unique by construction (hop additions are
             // anti-joined before entering seen) — `hit` needs no distinct
-            val hit = seen.join(broadcast(candNorms.df), Seq("url_norm"),
+            val hit = seen.join(broadcast(candNorms), Seq("url_norm"),
               "left_semi")
             candE.join(broadcast(hit), Seq("url_norm"), "left_anti")
           } else candE.join(seen, Seq("url_norm"), "left_anti")

@@ -429,7 +429,7 @@ object Similarity {
       dims: Int = 64): DataFrame = {
     val (rowsPerBand, bands) = lshParams(threshold)
     // filled now: the band joins and both vector gates scan it
-    val e = Par.measured(withNorm2(embeddings)
+    val e = CacheScope.fill(withNorm2(embeddings)
       .select(col("vec_id"), col("embedding"), col("n2"),
         graft.functions.VectorExprs.signBandKeys(
           col("embedding"), dims, rowsPerBand, bands).as("keys")))
@@ -464,7 +464,7 @@ object Similarity {
       dims: Int = 64): DataFrame = {
     val (rowsPerBand, bands) = lshParams(threshold)
     // filled now: the band joins and both vector gates scan it
-    val e = Par.measured(withNorm2(embeddings)
+    val e = CacheScope.fill(withNorm2(embeddings)
       .select(col("vec_id"), col("embedding"), col("n2"),
         graft.functions.VectorExprs.signBandKeys(
           col("embedding"), dims, rowsPerBand, bands).as("keys")))
@@ -728,7 +728,7 @@ object Similarity {
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
     // filled now: every codebook subspace and the encoder scan it
-    val resid = Par.measured(residualized(corpus, centroids))
+    val resid = CacheScope.fill(residualized(corpus, centroids))
     encodeResiduals(resid, residualCodebook(resid, subspaces, codes), subspaces)
   }
 
@@ -758,7 +758,7 @@ object Similarity {
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
     // filled now: every codebook subspace and the encoder scan it
-    val resid = Par.measured(residualized(corpus, centroids))
+    val resid = CacheScope.fill(residualized(corpus, centroids))
     val cb = CacheScope.track(residualCodebook(resid, subspaces, codes))
     val ccodes = encodeResiduals(resid, cb, subspaces)
     val queries = corpus.filter(queryPred)
@@ -908,7 +908,7 @@ object Similarity {
     val centroids = CacheScope.track((1 to lloydIters)
       .foldLeft(sampleCentroids(corpus, maxCells))((c, _) => lloydStep(corpus, c)))
     // filled now: every codebook subspace and the encoder scan it
-    val resid = Par.measured(residualized(corpus, centroids))
+    val resid = CacheScope.fill(residualized(corpus, centroids))
     val cb = CacheScope.track(residualCodebook(resid, subspaces, codes))
     val ccodes = encodeResiduals(resid, cb, subspaces)
       .join(corpus.select(col("vec_id"), col("embedding"), col("n2")),

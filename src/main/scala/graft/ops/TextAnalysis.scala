@@ -723,7 +723,8 @@ object TextAnalysis {
     val dupGrams = posts.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2).select(col("g"))
-    val starts = posts.join(Par.maybeBroadcast(dupGrams), Seq("g"), "left_semi")
+    val starts = posts.join(Par.maybeBroadcast(dupGrams, bounded = false), Seq("g"),
+      "left_semi")
       .select(col("doc_id"), col("p"))
     val covered = starts
       .select(col("doc_id"),

@@ -18,23 +18,25 @@ object graftbridge {
     s.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
   /** Catalyst's optimizer-time size estimate for a frame — available without
-    * running a job. Optimized afresh, so a cache filled since the frame was
-    * first planned reports the size of its blocks. */
-  def planSizeBytes(df: DataFrame): BigInt = {
-    val d = df.asInstanceOf[classic.Dataset[_]]
-    d.sparkSession.sessionState.executePlan(d.logicalPlan).optimizedPlan.stats.sizeInBytes
-  }
+    * running a job (statistics propagation over the optimized logical plan). */
+  def planSizeBytes(df: DataFrame): BigInt = planSize(df)._1
 
-  /** Whether [[planSizeBytes]] is a measured size: the plan reads only
-    * filled caches and local rows, through projections and filters. */
-  def sizeIsMeasured(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
+  /** [[planSizeBytes]] and whether it is a measured size: the plan reads
+    * only filled caches and local rows, through projections, filters and
+    * repartitions. `fresh` optimizes the plan anew: statistics are memoized
+    * per optimized plan, so a frame sized before its cache was filled
+    * reports the size of its blocks only through a new one. */
+  def planSize(df: DataFrame, fresh: Boolean = false): (BigInt, Boolean) = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project, Repartition}
     val d = df.asInstanceOf[classic.Dataset[_]]
-    !d.sparkSession.sessionState.executePlan(d.logicalPlan).optimizedPlan.exists {
+    val plan = if (fresh) d.sparkSession.sessionState.executePlan(d.logicalPlan).optimizedPlan
+      else d.queryExecution.optimizedPlan
+    val measured = !plan.exists {
       case r: execution.columnar.InMemoryRelation => !r.cacheBuilder.isCachedColumnBuffersLoaded
-      case _: LocalRelation | _: Project | _: Filter => false
+      case _: LocalRelation | _: Project | _: Filter | _: Repartition => false
       case _ => true
     }
+    (plan.stats.sizeInBytes, measured)
   }
 
   /** Rendered physical plan (test/diagnostic hook). */

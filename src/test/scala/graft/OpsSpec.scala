@@ -116,12 +116,19 @@ class OpsSpec extends SparkSpec {
       val over = plan(small(1000))
       assert(over.contains("ShuffledHashJoin"), over)
       assert(!over.contains("BroadcastHashJoin"), over)
-      // threshold off: neither measured nor hinted
-      spark.conf.set(key, "-1")
+      // an unbounded side declines on its estimate and is never filled
+      spark.conf.set(key, (1L << 20).toString)
       val tracked = CacheScope.trackedCount(spark)
+      val unbounded = graftbridge.executedPlanString(
+        big.join(Par.maybeBroadcast(small(998), bounded = false), "id"))
+        .linesIterator.find(_.contains("Join")).getOrElse("")
+      assert(unbounded.contains("ShuffledHashJoin"), unbounded)
+      assert(CacheScope.trackedCount(spark) == tracked)
+      // threshold off: not measured, the shuffle-hash hint kept
+      spark.conf.set(key, "-1")
       val off = plan(small(999))
       assert(!off.contains("BroadcastHashJoin"), off)
-      assert(!off.contains("ShuffledHashJoin"), off)
+      assert(off.contains("ShuffledHashJoin"), off)
       assert(CacheScope.trackedCount(spark) == tracked)
     } finally {
       spark.conf.set(key, oldThr)
